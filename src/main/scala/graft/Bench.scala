@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.llm.TrackedFrames
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** The bench's self-defense rules (r12), pure so the spec can drive
   * them synthetically. Two independent suspicion triggers send a
@@ -171,6 +173,18 @@ object BenchRules {
   * per-query min / retry values for the flagged queries.
   */
 object Bench {
+
+  /** Untimed warm-up: JVM/codegen startup and the first parquet-footer
+    * reads otherwise land entirely on whichever query runs first. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.range(1000000).selectExpr("sum(id)").collect()
+      SparkEntry.queries.get("q_pricing_summary")
+        .foreach(fn => fn(spark, sfDir).count())
+    } catch {
+      case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -181,27 +195,18 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JVM/codegen startup and the first parquet-footer
-    // reads otherwise land entirely on whichever query runs first.
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q_pricing_summary")
-        .foreach(fn => fn(spark, sfDir).count())
-    } catch { case _: Throwable => () }
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    warmUp(spark, sfDir)
+    // -1 marks a failed run; the cause goes to stderr
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try fn(spark, sfDir).count()
+      catch {
+        case NonFatal(e) =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
-    }
-    def releasePerQueryCaches(): Unit = {
-      // per-invocation dedup/mixing caches must not accumulate across
-      // the full query sweep
-      graft.llm.Dedup.releaseCaches()
-      graft.llm.Mixing.releaseCaches()
-      graft.llm.Lines.releaseCaches()
-      graft.llm.Bpe.releaseCaches()
-      graft.llm.LanguageModel.releaseCaches()
-      graft.llm.Unigram.releaseCaches()
     }
     // Contention canary: three cheap, plan-stable queries (scan+agg,
     // filter, explode+agg shapes) timed as one probe. All plans are
@@ -212,7 +217,8 @@ object Bench {
     // survivors of a partial failure would make probe points
     // incomparable (2-query vs 3-query totals) and fake/mask drift
     def canaryPass(): Double = {
-      val ts = canaryNames.flatMap(SparkEntry.queries.get).map(fn => once(fn))
+      val ts = canaryNames.flatMap(n =>
+        SparkEntry.queries.get(n).map(once(n, _)))
       if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else ts.sum
     }
     // each probe point = min of two back-to-back passes, so a single
@@ -255,8 +261,9 @@ object Bench {
     // GC/scheduler noise that min-of-two let through. Cold-start
     // behavior is characterized separately in README/SCALING.md.
     val results = selected.map { case (name, fn) =>
-      val runs = Seq(once(fn), once(fn), once(fn))
-      releasePerQueryCaches()
+      val runs = Seq(once(name, fn), once(name, fn), once(name, fn))
+      // per-query frames must not accumulate across the full sweep
+      TrackedFrames.releaseQuery()
       i += 1
       if (canaryOn && i == half) canaryMid = canaryProbe()
       val failed = runs.exists(_ < 0)
@@ -280,15 +287,13 @@ object Bench {
     val retryTriples = BenchRules.retryList(results.toSeq, baseline)
       .map { name =>
         val probe = if (canaryOn) canaryProbe() else -1.0
-        val t = once(selected(name))
-        releasePerQueryCaches()
+        val t = once(name, selected(name))
+        TrackedFrames.releaseQuery()
         (name, t, probe)
       }
     val retries = retryTriples.map { case (n, t, _) => n -> t }
     val retryCanary = retryTriples.map { case (n, _, p) => n -> p }
-    graft.llm.Similarity.clearIvfCache()
-    graft.llm.Similarity.clearPqCache()
-    graft.llm.Dedup.clearCorpusStateCache()
+    TrackedFrames.releaseAll()
     // 4-decimal timings keep the one-line JSON short enough to survive
     // log-tail capture; the full line is also persisted to a file so no
     // per-query number is ever lost to truncation.

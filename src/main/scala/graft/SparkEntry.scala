@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Aggregates, Relational}
+import graft.operators.{Aggregates, Relational, Skew}
 import graft.llm.{Dedup, Similarity}
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -28,30 +28,6 @@ object SparkEntry {
   private def mdUniform(key: Column, salt: String): Column =
     (conv(substring(md5(concat(key.cast("string"), lit(":" + salt))),
       1, 13), 16, 10).cast("double") + 1.0) / 4503599627370498.0
-
-  /** Input-skew guard (guide §2.5: "one huge unsplittable file …
-    * repartition immediately after the read"): the sf parquet inputs
-    * are single-row-group files, so a scan yields ONE effective task
-    * and every expensive per-row kernel chained onto it runs
-    * serialized behind 31 idle cores. When the scan's partition count
-    * is below the session's parallelism, fan the rows out round-robin
-    * BEFORE the heavy projection; at production scale the scan is
-    * already file-parallel and this is a plan-time no-op (the probe
-    * reads the partition count, it runs no job). Only applied where a
-    * genuinely expensive kernel or near-unique-key aggregate follows
-    * the scan — a fan-out in front of cheap projections would just
-    * add an exchange. */
-  private def fanOut(df: DataFrame, key: Column*): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    // hash-partition on a provided key rather than round-robin: a
-    // keyless repartition first SORTS its input by the full binary
-    // row (spark.sql.execution.sortBeforeRepartition, needed for
-    // deterministic retries) — for payload-carrying rows that sort
-    // costs more than the fan-out saves
-    else if (key.nonEmpty) df.repartition(target, key: _*)
-    else df.repartition(target)
-  }
 
   /** Shared graph fixture: undirected co-purchase pair edges between
     * parts sharing an urgent order — consumed by the triangle-count,
@@ -267,7 +243,7 @@ object SparkEntry {
       // r15: fan out — the per-row QuantileSummaries inserts at
       // accuracy 10000 ran as one task behind the single-row-group
       // scan (measured: 984 + 481 ms serialized passes)
-      val li = fanOut(t(s, d, "lineitem")
+      val li = Skew.fanOut(t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice")))
       val approx = Aggregates.percentiles(
         Seq("l_returnflag"), "l_extendedprice",
@@ -690,8 +666,8 @@ object SparkEntry {
       // r15: fan the bronze rows out before the extraction kernel —
       // the single-row-group scan otherwise serializes the whole
       // html_to_text + quality chain (measured: a 1.3 s one-task job)
-      val bronze = fanOut(docs.select(col("doc_id"), html.as("html")),
-        col("doc_id"))
+      val bronze = Skew.fanOut(docs.select(col("doc_id"), html.as("html")),
+        Seq(col("doc_id")))
       // r15: ONE kernel pass — extraction AND both quality kernels
       // land in the same checkpointed projection, so html_to_text no
       // longer re-runs for the n_text conservation count (the old
@@ -4143,9 +4119,9 @@ object SparkEntry {
       // aggregate off the scan task AND satisfies the per-order
       // rollup (subset clustering): one exchange end to end before
       // the s_name aggregate.
-      val pairs = fanOut(t(s, d, "lineitem")
+      val pairs = Skew.fanOut(t(s, d, "lineitem")
           .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
-            col("l_shipdate").as("__sd")), col("ok"))
+            col("l_shipdate").as("__sd")), Seq(col("ok")))
         .groupBy(col("ok"), col("sk"))
         .agg(max(col("__sd")).as("__mx"))
       val flagged = pairs.join(broadcast(t(s, d, "orders")
@@ -4335,8 +4311,8 @@ object SparkEntry {
       // fanOut: the Expand multiplies every scanned row 6x and the
       // partial distinct aggregates hash near-unique keys — measured
       // as a 736 ms single task on the single-row-group scan
-      Relational.profileColumns(fanOut(t(s, d, "orders"),
-          col("o_orderkey")),
+      Relational.profileColumns(Skew.fanOut(t(s, d, "orders"),
+          Seq(col("o_orderkey"))),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority"))),
 

@@ -1,6 +1,8 @@
 package graft
+import graft.llm.TrackedFrames
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,21 +26,15 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
-      // the dedup/mixing operators persist per-invocation intermediates;
-      // a driver running all queries must not accumulate every cache
-      graft.llm.Dedup.releaseCaches()
-      graft.llm.Mixing.releaseCaches()
-      graft.llm.Lines.releaseCaches()
-      graft.llm.Bpe.releaseCaches()
-      graft.llm.LanguageModel.releaseCaches()
-      graft.llm.Unigram.releaseCaches()
+      // a driver running all queries must not accumulate every
+      // query's tracked frames
+      TrackedFrames.releaseQuery()
     }
-    graft.llm.Similarity.clearIvfCache()
-    graft.llm.Similarity.clearPqCache()
-    graft.llm.Dedup.clearCorpusStateCache()
+    TrackedFrames.releaseAll()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -23,27 +23,10 @@ object Bpe {
     * distinct-word cardinality). Unlike [[Dedup.releaseCaches]], a
     * released CHECKPOINT cannot recompute — call [[releaseCaches]]
     * only after the consuming action, when the returned frames are
-    * discarded (Verify/Bench do exactly that per query). Without a
-    * release, blocks live until the driver GCs the plan (Spark's
-    * ContextCleaner). */
-  private val trackedCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    * discarded (Verify/Bench do exactly that per query). */
+  private[graft] val tracked = new TrackedFrames
 
-  private def trackCp(df: DataFrame): DataFrame = {
-    trackedCheckpoints.add(df)
-    df
-  }
-
-  /** Unpersist every checkpoint pinned since the last release. Only
-    * call once frames returned by this object are no longer needed —
-    * checkpoint-backed frames cannot recompute after release. */
-  def releaseCaches(): Unit = {
-    var df = trackedCheckpoints.poll()
-    while (df != null) {
-      org.apache.spark.sql.graft.Bridge.releaseFrame(df)
-      df = trackedCheckpoints.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** (word, freq) over whitespace tokens of the normalized text — the
     * pre-count that makes BPE training corpus-size-independent. */
@@ -274,7 +257,8 @@ object Bpe {
     * constant, and drops per-merge job count from 4 to 2 (argmax +
     * delta-fused counts update). Merge-sequence equality with
     * [[trainFullRecount]] is spec-enforced (BpeSpec) and re-asserted
-    * at 2M words inside [[graft.tools.BpeVocabProbe]]. */
+    * at 2M words by the BpeVocabProbe tool (in git history:
+    * `git show 85cc5d0:src/main/scala/graft/tools/BpeVocabProbe.scala`). */
   private def trainIncrementalFromSyms(syms0: DataFrame, numMerges: Int,
       minCount: Long, compactEvery: Int = 10,
       chunkWords: Long = 1024L,
@@ -482,7 +466,7 @@ object Bpe {
     }
     // the FINAL checkpoint backs the returned frame — it stays pinned
     // until the caller is done (released via [[releaseCaches]])
-    lastCp.foreach(trackCp)
+    lastCp.foreach(tracked.trackCheckpoint(_))
     cur
   }
 
@@ -558,8 +542,9 @@ object Bpe {
     // output row — measured ~25x on this stage, 15 s -> 0.6 s at sf0.1
     // (cf. the staging pitfall on Dedup.shingleHashRows). Checkpointing
     // ships plain arrays.
-    val segCp = trackCp(applyMerges(initSymbols(wf, marker), merges)
-      .select(col("word"), col("symbols")).localCheckpoint())
+    val segCp = tracked.trackCheckpoint(
+      applyMerges(initSymbols(wf, marker), merges)
+        .select(col("word"), col("symbols")).localCheckpoint())
     val seg = broadcast(segCp)
     // default-vocab base chars come from the MATERIALIZED word table,
     // not a second wordFreq pass over the corpus

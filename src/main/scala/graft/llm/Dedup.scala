@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.functions.Text
+import graft.operators.Skew
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,89 +25,19 @@ object Dedup {
     * [[lshVerifiedEdges]], [[incrementalDedup]],
     * [[incrementalDedupWithState]] and [[semanticDedup]] persist small
     * intermediate frames (signatures / shingle-hash rows) that feed
-    * several plan branches. The blocks stay cached until released —
-    * fine for job-per-invocation use, a leak for a long-lived driver
-    * calling these repeatedly. Such callers should invoke
-    * [[releaseCaches]] after the consuming action completes (safe at
-    * any time: a released frame is recomputed on next use, never
-    * wrong). */
-  private val trackedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    * several plan branches. Long-lived drivers call [[releaseCaches]]
+    * after the consuming action (see [[TrackedFrames]]). */
+  private[graft] val tracked = new TrackedFrames
 
-  /** Input-skew guard for the tokenize/hash prologues (guide §2.5 —
-    * same rationale as SparkEntry.fanOut): a single-row-group or
-    * otherwise unsplittable input scan yields fewer partitions than
-    * the session has cores, and the shingle/signature kernels chained
-    * onto it then build their persisted frames serialized on one
-    * task. Hash-repartition on the id when the scan is that narrow;
-    * plan-time no-op on an already-parallel scan. */
-  private def fanOutById(df: DataFrame, idCol: String,
-      minBytes: Long = 0L): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // r15 second pass: `minBytes` gates the fan-out on the PLAN-TIME
-    // input size estimate. The fan-out pays only when the kernel CPU
-    // serialized on the narrow scan exceeds the exchange + extra
-    // per-stage task scheduling it introduces; for call sites whose
-    // map-side work is light (signature banding), same-window A/Bs
-    // measured the unconditional fan-out as a NET LOSS on small
-    // inputs (q_dedup_corpus 1.45 -> 0.87 without it) while the
-    // 100 TB narrow-scan case (one multi-GB unsplittable file) still
-    // wants it — so those sites fan out only past a size floor.
-    // Sites whose downstream is CPU-dense per row at any size
-    // (prefix-verify intersections) keep minBytes = 0.
-    if (df.rdd.getNumPartitions >= target) df
-    else if (minBytes > 0L &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) df
-    else df.repartition(target, col(idCol))
-  }
-
-  /** Size floor for the light-map-side fan-out call sites: below this
-    * plan-estimated input size the serialized kernel work is cheaper
-    * than the exchange it would take to spread it. */
-  private val fanOutMinBytes = 64L << 20
-
-  /** Pinned keyed repartition in front of a CPU-dense aggregate whose
-    * input is SMALL IN BYTES but expensive per row (pair-expansion
-    * Generates, array intersections): AQE's partition coalescing
-    * targets bytes, so a few-MB exchange feeding such a stage
-    * collapses to one or two tasks and the whole expansion serializes
-    * behind idle cores (guide §2.5 — measured: q_similarity_join's
-    * verify stage ran as ONE 1.4 s task at sf0.1). Repartitioning on
-    * the downstream grouping/join key merges with the exchange that
-    * operator needs anyway (subset clustering), and an explicit
-    * partition count is exempt from AQE coalescing. The count is
-    * max(defaultParallelism, configured shuffle partitions), so on a
-    * real cluster the exchange keeps the exact partition count the
-    * planner would have used — only the coalesce of the CPU-dense
-    * stage is suppressed. */
-  private def pinWide(df: DataFrame, key: Column*): DataFrame = {
-    val s = df.sparkSession
-    val shufflePartitions =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case scala.util.control.NonFatal(_) => 0 }
-    val n = math.max(s.sparkContext.defaultParallelism, shufflePartitions)
-    df.repartition(n, key: _*)
-  }
-
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedCaches.add(p)
-    p
-  }
-
-  /** Unpersist every intermediate frame cached by this object's
-    * operators since the last release. */
-  def releaseCaches(): Unit = {
-    var df = trackedCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = trackedCaches.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** Currently-tracked (not yet released) cached frames — drains to 0
     * after [[releaseCaches]]. */
-  def trackedCacheCount: Int = trackedCaches.size
+  def trackedCacheCount: Int = tracked.size
+
+  /** [[Skew.fanOut]] floor in front of light map-side work (signature
+    * banding); CPU-dense sites (prefix-verify) fan out at any size. */
+  private val fanOutMinBytes = 64L << 20
 
   /** Exact dedup: group identical normalized texts, keep min doc id as
     * canonical, report group size. 100 TB note: the shuffle carries only
@@ -213,8 +144,9 @@ object Dedup {
     // filter then reads the materialized array's size. Same
     // MEMORY_AND_DISK + releaseCaches discipline as ngramJaccardPairs
     // (isolated sf0.1 A/B: 3.89 s -> 1.71 s min).
-    val sf = persistTracked(shingleFrame(
-      fanOutById(df, idCol, fanOutMinBytes), idCol, textCol, shingleN))
+    val sf = tracked.persist(shingleFrame(
+      Skew.fanOut(df, Seq(col(idCol)), fanOutMinBytes),
+      idCol, textCol, shingleN))
     val perDoc = sf
       .select(col("id"), size(col("shingles")).as("n_shingles"))
       .filter(col("n_shingles") > 0)
@@ -325,8 +257,9 @@ object Dedup {
     // orders of magnitude smaller than the text it derives from, the
     // same trade Spark ML's MinHashLSH makes when it caches transformed
     // input. Spills to disk if it outgrows executor memory.
-    val sig = persistTracked(signatureFrame(
-      fanOutById(df, idCol, fanOutMinBytes), idCol, textCol, shingleN, k))
+    val sig = tracked.persist(signatureFrame(
+      Skew.fanOut(df, Seq(col(idCol)), fanOutMinBytes),
+      idCol, textCol, shingleN, k))
     if (!transitive) clustersFromSig(sig, bands, rowsPerBand, minEstJaccard)
     else
       // exact closure for corpora where near-dup CHAINS matter
@@ -390,7 +323,7 @@ object Dedup {
     // aggregation over the full text runs exactly once. All filtering
     // joins are left_semi: they never widen rows with join-side
     // columns, and a semi join on a small id set broadcasts.
-    val exactKeep = persistTracked(exact(df, idCol, textCol)
+    val exactKeep = tracked.persist(exact(df, idCol, textCol)
       .select(col("canonical_id").as(idCol)))
     val exactKept = df.join(exactKeep, Seq(idCol), "left_semi")
     val clusters = minhashClusters(exactKept, idCol, textCol,
@@ -506,7 +439,8 @@ object Dedup {
   def lshVerifiedEdges(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       minEstJaccard: Double = 0.8): DataFrame = {
-    val sig = persistTracked(signatureFrame(fanOutById(df, idCol),
+    val sig = tracked.persist(signatureFrame(
+      Skew.fanOut(df, Seq(col(idCol))),
       idCol, textCol, shingleN, bands * rowsPerBand))
     verifiedEdges(sig, bands, rowsPerBand, minEstJaccard)
   }
@@ -599,9 +533,9 @@ object Dedup {
       idCol: String, textCol: String, shingleN: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 4, minEstJaccard: Double = 0.7): DataFrame = {
     val st = CorpusDedupState(
-      persistTracked(corpus.select(Text.fingerprint(col(textCol)).as("fp"))
+      tracked.persist(corpus.select(Text.fingerprint(col(textCol)).as("fp"))
         .distinct()),
-      persistTracked(signatureFrame(corpus, idCol, textCol, shingleN,
+      tracked.persist(signatureFrame(corpus, idCol, textCol, shingleN,
         bands * rowsPerBand)),
       shingleN, bands, rowsPerBand)
     // materialize before use: cSig feeds the banding AND the verify
@@ -719,7 +653,7 @@ object Dedup {
     // text-scan subtree into every one of the ~10 downstream joins —
     // measured 1,400-line physical plan / 91 jobs per batch, vs ~20
     // jobs with the three batch-sized seams materialized.
-    val bState = persistTracked(newDocs
+    val bState = tracked.persist(newDocs
       .select(col(idCol).as("id"),
         Text.fingerprint(col(textCol)).as("fp"),
         split(lower(Text.normWs(col(textCol))), " ").as("__toks"))
@@ -736,7 +670,7 @@ object Dedup {
     // signatures of the exact survivors (second materialized seam:
     // feeds the banding, the estimated-jaccard verify, and the
     // within-batch clustering)
-    val sigKept = persistTracked(bState.select("id", "sig")
+    val sigKept = tracked.persist(bState.select("id", "sig")
       .join(exactKeep, Seq("id"), "left_semi"))
     sigKept.count()
     // near vs corpus: cross-set banding (batch bands join corpus bands)
@@ -756,7 +690,7 @@ object Dedup {
     // near within the batch: standard cluster contraction over the
     // corpus-pass survivors (third seam — clustersFromSig reads its
     // input from three plan branches)
-    val keptSig = persistTracked(
+    val keptSig = tracked.persist(
       sigKept.join(flagged, Seq("id"), "left_anti"))
     keptSig.count()
     val clusters = clustersFromSig(keptSig, bands, rowsPerBand,
@@ -801,7 +735,7 @@ object Dedup {
       .setK(nlist).setSeed(seed).setFeaturesCol("__features")
       .setInitMode("random").setMaxIter(10)
       .setPredictionCol("list_id")
-    val side = persistTracked(
+    val side = tracked.persist(
       km.fit(feats).transform(feats).select(col("list_id"), col("id"),
         col("v")))
     val close = side.select(col("list_id"), col("id").as("id_a"),
@@ -961,8 +895,8 @@ object Dedup {
     // nothing is exchange-reusable — without the persist the whole
     // tokenize+hash pipeline runs twice. (id, hash) rows are ~an order
     // smaller than the text; spills to disk if bigger than memory.
-    val sh = persistTracked(
-      shingleHashRows(fanOutById(df, idCol), idCol, textCol, shingleN))
+    val sh = tracked.persist(shingleHashRows(
+      Skew.fanOut(df, Seq(col(idCol))), idCol, textCol, shingleN))
     // No pre-distinct: collect_set / count_distinct dedupe within the
     // same shuffle that builds the buckets, saving a full (id, shingle)
     // exchange. Intersections via bucket-and-combine instead of a
@@ -976,7 +910,7 @@ object Dedup {
     // rows, so AQE coalesces it to ~1 task — but the SAME stage then
     // runs the pair Generates and the intersection-count partials,
     // which are the expensive part of the whole query
-    val buckets = pinWide(sh, col("shingle")).groupBy("shingle")
+    val buckets = Skew.pinWide(sh, col("shingle")).groupBy("shingle")
       .agg(sort_array(collect_set(col("id"))).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= maxDocFreq)
     val pairs = buckets
@@ -1019,15 +953,15 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // distinct (id, shingle) rows feed three branches (frequency agg,
     // ranking, verify sets) — persist, same trade as ngramJaccardPairs
-    val sh = persistTracked(shingleHashRows(fanOutById(df, idCol),
-      idCol, textCol, shingleN).distinct())
+    val sh = tracked.persist(shingleHashRows(
+      Skew.fanOut(df, Seq(col(idCol))), idCol, textCol, shingleN).distinct())
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     // pinWide on the three CPU-dense post-exchange stages (ranking
     // windows, prefix-bucket pair expansion, set-build + verify): all
     // three exchanges carry id/hash-width rows that AQE coalesces to
     // ~1 task, serializing the sorts, Generates and array
     // intersections that dominate this query's cost
-    val ranked = pinWide(sh.join(freq, "shingle"), col("id"))
+    val ranked = Skew.pinWide(sh.join(freq, "shingle"), col("id"))
       .withColumn("r", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("shingle"))))
       .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("id")))
@@ -1037,7 +971,7 @@ object Dedup {
     // floor(0.1999...96*n) for t=0.8 and silently drops one slot)
     val prefix = ranked.filter(col("r") <=
       col("n_sh") - ceil(lit(minJaccard) * col("n_sh") - lit(1e-9)) + 1)
-    val buckets = pinWide(prefix, col("shingle")).groupBy("shingle")
+    val buckets = Skew.pinWide(prefix, col("shingle")).groupBy("shingle")
       .agg(sort_array(collect_set(col("id"))).as("ids"))
       .filter(size(col("ids")) > 1)
     val cands = buckets
@@ -1050,7 +984,7 @@ object Dedup {
     // broadcast verify joins AND the array_intersect projection —
     // the single most expensive stage of the query (measured 1.4 s as
     // one AQE-coalesced task at sf0.1)
-    val sets = pinWide(sh, col("id")).groupBy("id")
+    val sets = Skew.pinWide(sh, col("id")).groupBy("id")
       .agg(sort_array(collect_set(col("shingle"))).as("set"))
     cands
       .join(sets.select(col("id").as("id_a"), col("set").as("sa")), "id_a")
@@ -1176,7 +1110,7 @@ object Dedup {
       n: Int = 20, minOcc: Int = 2,
       maxOcc: Int = Int.MaxValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val rows = persistTracked(spanHashRows(df, idCol, textCol, n))
+    val rows = tracked.persist(spanHashRows(df, idCol, textCol, n))
     val dup = rows.groupBy("h", "h2").agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= minOcc && col("occ") <= maxOcc)
       .select("h", "h2")
@@ -1210,7 +1144,7 @@ object Dedup {
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 20, minOcc: Int = 2,
       maxOcc: Int = Int.MaxValue): DataFrame = {
-    val rows = persistTracked(spanHashRows(df, idCol, textCol, n))
+    val rows = tracked.persist(spanHashRows(df, idCol, textCol, n))
     val dupKeeper = rows.groupBy("h", "h2")
       .agg(count(lit(1)).as("occ"),
         min(struct(col("id"), col("pos"))).as("keep"))
@@ -1235,7 +1169,7 @@ object Dedup {
       textCol: String, covered: DataFrame): DataFrame = {
     // persisted: the token rows feed both the reassembly branch and the
     // per-doc total count — without it the corpus re-tokenizes per branch
-    val toks = persistTracked(df.select(col(idCol).as("id"),
+    val toks = tracked.persist(df.select(col(idCol).as("id"),
         posexplode(split(Text.normWs(col(textCol)), " "))
           .as(Seq("__p", "tok")))
       .select(col("id"), (col("__p") + 1).as("tpos"), col("tok")))

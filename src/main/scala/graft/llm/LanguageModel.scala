@@ -13,29 +13,13 @@ import org.apache.spark.sql.functions._
   */
 object LanguageModel {
 
-  /** Same tracked-persist contract as [[Dedup]]: [[bigramScore]] caches
-    * its exploded bigram frame — it feeds three frequency aggregations
-    * plus the final join, so without the cache the corpus-wide
-    * tokenize+explode runs four times. Long-lived drivers call
-    * [[releaseCaches]] after the consuming action; a released frame is
-    * recomputed on next use, never wrong. */
-  private val trackedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+  /** [[bigramScore]] caches its exploded bigram frame: it feeds three
+    * frequency aggregations plus the final join, so without the cache
+    * the corpus-wide tokenize+explode runs four times. Same release
+    * contract as [[Dedup.releaseCaches]]. */
+  private[graft] val tracked = new TrackedFrames
 
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedCaches.add(p)
-    p
-  }
-
-  /** Unpersist every frame cached by this object since last release. */
-  def releaseCaches(): Unit = {
-    var df = trackedCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = trackedCaches.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** (idCol, n_tokens, avg_logp) per document, where avg_logp is the
     * mean natural-log unigram probability of the doc's tokens (token
@@ -52,7 +36,7 @@ object LanguageModel {
     // persisted: toks feeds the frequency agg AND the join-back — two
     // corpus-wide tokenize+explode scans without the cache (same fix
     // as bigramScore's, one branch smaller)
-    val toks = persistTracked(df.select(col(idCol).as("id"),
+    val toks = tracked.persist(df.select(col(idCol).as("id"),
       explode(Text.tokens(lower(col(textCol)))).as("w"))
       .filter(length(col("w")) > 0))
     val freq = toks.groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -140,7 +124,7 @@ object LanguageModel {
       sequence(lit(2), size(col("t")))).otherwise(array())
     // persisted: bg feeds bfreq/sfreq/uni AND the final join — four
     // corpus-wide tokenize+explode scans without the cache
-    val bg = persistTracked(toks
+    val bg = tracked.persist(toks
       .select(col("id"), col("t"), explode(starts).as("i"))
       .select(col("id"),
         element_at(col("t"), col("i") - 1).as("w1"),
@@ -184,14 +168,14 @@ object LanguageModel {
       sequence(lit(2), size(col("t")))).otherwise(array())
     // persisted: bg feeds bfreq AND the final join — two corpus-wide
     // tokenize+explode scans without the cache
-    val bg = persistTracked(toks
+    val bg = tracked.persist(toks
       .select(col("id"), col("t"), explode(starts).as("i"))
       .select(col("id"),
         element_at(col("t"), col("i") - 1).as("w1"),
         element_at(col("t"), col("i")).as("w2")))
     // persisted: the type table feeds c1/n1f, n1b, the type total AND
     // the final join
-    val bfreq = persistTracked(
+    val bfreq = tracked.persist(
       bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val left = bfreq.groupBy("w1")
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))

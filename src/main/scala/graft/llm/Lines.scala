@@ -25,25 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object Lines {
 
-  /** Cache tracking for the multi-branch strip plans, mirroring
-    * [[Dedup.releaseCaches]]: long-lived drivers release after the
-    * consuming action; a released frame recomputes, never goes wrong. */
-  private val trackedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+  /** Cache tracking for the multi-branch strip plans; same release
+    * contract as [[Dedup.releaseCaches]]. */
+  private[graft] val tracked = new TrackedFrames
 
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedCaches.add(p)
-    p
-  }
-
-  def releaseCaches(): Unit = {
-    var df = trackedCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = trackedCaches.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** One row per (doc, line): (id, pos, line). Position is 0-based and
     * preserved so documents can be reassembled in order. Lines are NOT
@@ -102,7 +88,7 @@ object Lines {
     // persisted: the exploded line rows feed THREE branches (frequency
     // agg, per-doc totals, kept reassembly) keyed differently — without
     // the persist each branch re-scans and re-splits the corpus text
-    val rows = persistTracked(lineRows(df, idCol, textCol)
+    val rows = tracked.persist(lineRows(df, idCol, textCol)
       .withColumn("fp", lineFp(col("line"))))
     val freqFps = rows.groupBy("fp")
       .agg(count_distinct(col("id")).as("n_docs"))

@@ -20,29 +20,13 @@ import graft.operators.Relational
   */
 object Mixing {
 
-  /** Same tracked-persist contract as [[Dedup]]: [[tokenBudgetSelect]]
-    * caches its scored frame (it feeds the histogram pass AND both
-    * kept-set branches — without the cache the quality-score regex
-    * scan runs three times). Long-lived drivers call [[releaseCaches]]
-    * after the consuming action; a released frame is recomputed on
-    * next use, never wrong. */
-  private val trackedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+  /** [[tokenBudgetSelect]] caches its scored frame: it feeds the
+    * histogram pass AND both kept-set branches — without the cache the
+    * quality-score regex scan runs three times. Same release contract
+    * as [[Dedup.releaseCaches]]. */
+  private[graft] val tracked = new TrackedFrames
 
-  private def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedCaches.add(p)
-    p
-  }
-
-  /** Unpersist every frame cached by this object since last release. */
-  def releaseCaches(): Unit = {
-    var df = trackedCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking = false)
-      df = trackedCaches.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** Per-stratum acceptance rates for temperature resampling
     * (multilingual-LM style: sample shares proportional to p^alpha, so
@@ -368,7 +352,7 @@ object Mixing {
     require(budgetTokens >= 0)
     // cached: feeds the histogram job and both kept-set branches —
     // otherwise the quality-regex scan of the corpus runs three times
-    val scored = persistTracked(docs.select(col(idCol).as("doc_id"),
+    val scored = tracked.persist(docs.select(col(idCol).as("doc_id"),
       Text.qualityScore(col(textCol)).as("quality"),
       Text.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .filter(col("quality").isNotNull))

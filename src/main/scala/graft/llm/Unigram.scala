@@ -24,21 +24,9 @@ object Unigram {
   /** Same checkpoint-tracking contract as [[Bpe]]: released
     * checkpoints cannot recompute — release only after the consuming
     * action (Verify/Bench do exactly that per query). */
-  private val trackedCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]
+  private[graft] val tracked = new TrackedFrames
 
-  private def trackCp[T](ds: Dataset[T]): Dataset[T] = {
-    trackedCheckpoints.add(ds)
-    ds
-  }
-
-  def releaseCaches(): Unit = {
-    var ds = trackedCheckpoints.poll()
-    while (ds != null) {
-      org.apache.spark.sql.graft.Bridge.releaseFrame(ds)
-      ds = trackedCheckpoints.poll()
-    }
-  }
+  def releaseCaches(): Unit = tracked.release()
 
   /** Seed candidate vocabulary: every substring of length <= maxPieceLen
     * of every distinct word, freq-weighted, cut to the top `seedSize`
@@ -152,7 +140,7 @@ object Unigram {
     import spark.implicits._
     // one corpus scan into the bounded word table, reused every iter
     // (lower() matches encodeDocs so train/encode see the same words)
-    val wf = trackCp(Bpe.wordFreq(
+    val wf = tracked.trackCheckpoint(Bpe.wordFreq(
         df.select(lower(col(textCol)).as(textCol)), textCol)
       .as[(String, Long)].localCheckpoint())
     def toLogp(counts: Array[(String, Long)]): Map[String, Double] = {

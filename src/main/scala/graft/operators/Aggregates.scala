@@ -13,20 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Aggregates {
 
-  /** Input-skew guard for aggregate prologues (guide §2.5, the
-    * SparkEntry.fanOut idiom): when the scan yields fewer partitions
-    * than the session's parallelism (single-row-group input), a
-    * near-unique-key partial aggregate chained onto it runs
-    * serialized on the scan task and reduces ~nothing. Repartition on
-    * (a prefix of) the grouping key so the pinned exchange merges
-    * with the aggregate's own (subset clustering) and the partials
-    * run wide; plan-time no-op on already-parallel scans. */
-  private def fanOutOnKey(df: DataFrame, key: Column*): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target, key: _*)
-    else df
-  }
-
   /** A3 — descriptive-stats block: per-group min/max/avg/stddev of a set
     * of metrics, rounded. Reference: `EDA_silver.ipynb:566-586` (cell 18).
     * One aggregate pass for all metrics (the reference loops per metric).
@@ -1364,9 +1350,9 @@ object Aggregates {
     // frequent-item count aggregate read this frame, and the triple
     // expansion joins it three ways — without the checkpoint each
     // consumer re-runs the distinct shuffle
-    val bi = fanOutOnKey(
+    val bi = Skew.fanOut(
         df.select(col(basketCol).as("__b"), col(itemCol).as("__i")),
-        col("__b"))
+        Seq(col("__b")))
       .distinct()
       .localCheckpoint(true)
     // support threshold as a FRACTION of baskets, not an absolute
@@ -1428,9 +1414,9 @@ object Aggregates {
       scale: Int = 6): DataFrame = {
     // lineage cut: the distinct (basket, item) frame feeds the basket
     // count, the per-item counts and the pair expansion
-    val bi = fanOutOnKey(
+    val bi = Skew.fanOut(
         df.select(col(basketCol).as("__b"), col(itemCol).as("__i")),
-        col("__b"))
+        Seq(col("__b")))
       .distinct()
       .localCheckpoint(false)
     val n = broadcast(bi.agg(countDistinct(col("__b")).as("__n")))
@@ -1938,10 +1924,10 @@ object Aggregates {
     // serialized scan task only adds wall; the pinned repartition
     // merges with the groupBy's own exchange (one exchange either
     // way) and is a plan-time no-op on parallel scans.
-    val slim = fanOutOnKey(
+    val slim = Skew.fanOut(
         df.select(kc :+ col(valueCol).cast("double").as("__v") :+
           col(weightCol).cast("double").as("__w"): _*),
-        kc :+ col("__v"): _*)
+        kc :+ col("__v"))
       .groupBy(kc :+ col("__v"): _*)
       .agg(sum(col("__w")).as("__w"))
     val mm = broadcast(slim.groupBy(kc: _*)

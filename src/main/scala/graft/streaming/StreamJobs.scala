@@ -89,20 +89,18 @@ object StreamJobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val served = try serving.read(spark) catch {
-            case _: Throwable => null
-          }
-          if (served != null) {
-            val updated = StreamOps.backfillLabels(served,
-              batch.select(col("symbol"), col("window_start"),
-                col("window_end"), col("label")))
-              // bump the version so the rewrite wins the keyed-merge
-              // against the rows it is correcting (same primary key)
-              .withColumn("version", col("version") + 1)
-            serving.upsert(updated)
-          }
+        // gate on exists, don't catch read failures (KeyedStore
+        // contract): only a not-yet-created store has nothing to
+        // back-fill; a failed read must fail the batch
+        if (!batch.isEmpty && serving.exists) {
+          val served = serving.read(batch.sparkSession)
+          val updated = StreamOps.backfillLabels(served,
+            batch.select(col("symbol"), col("window_start"),
+              col("window_end"), col("label")))
+            // bump the version so the rewrite wins the keyed-merge
+            // against the rows it is correcting (same primary key)
+            .withColumn("version", col("version") + 1)
+          serving.upsert(updated)
         }
       }
       .start()

@@ -75,7 +75,7 @@ object StreamOps {
     * State is bounded by watermark horizon x per-bucket volume, and a
     * skewed bucket's spike leaves state whole once the watermark
     * passes it — both measured, per trigger, in
-    * `tools/R6StreamStateProbe` (SCALING.md round-6 table). Skew note
+    * the R6StreamStateProbe run (SCALING.md round-6 table). Skew note
     * for cluster duty: the join hash-partitions on the bucket struct,
     * so one hot minute lands on one task's state store. If per-minute
     * volume can exceed an executor's state budget, use

@@ -167,7 +167,8 @@ object PlanAudit {
         println(s"| $n | $exch | $bcast | $wscg | $tops | $w | " +
           s"${if (pushed > 0) s"$pushed scans" else "-"} |")
       } catch {
-        case e: Throwable => println(s"| $n | plan error: ${e.getMessage} |")
+        case scala.util.control.NonFatal(e) =>
+          println(s"| $n | plan error: ${e.getMessage} |")
       }
     }
     java.nio.file.Files.writeString(

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
+import graft.llm.TrackedFrames
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
@@ -66,18 +67,7 @@ object ProfileQuery {
           }
         }
     })
-    // warmup (mirrors Bench)
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q_pricing_summary")
-        .foreach(fn => fn(spark, sfDir).count())
-    } catch { case _: Throwable => () }
-    def release(): Unit = {
-      graft.llm.Dedup.releaseCaches(); graft.llm.Mixing.releaseCaches()
-      graft.llm.Lines.releaseCaches(); graft.llm.Bpe.releaseCaches()
-      graft.llm.LanguageModel.releaseCaches()
-      graft.llm.Unigram.releaseCaches()
-    }
+    Bench.warmUp(spark, sfDir)
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       var wall = 0.0
@@ -88,7 +78,7 @@ object ProfileQuery {
         fn(spark, sfDir).count()
         wall = (System.nanoTime() - t0) / 1e9
         collecting = false
-        release()
+        TrackedFrames.releaseQuery()
         println(f"[profile] $n rep $rep wall ${wall}%.3f s")
       }
       Thread.sleep(300) // let the listener bus drain the last job's events

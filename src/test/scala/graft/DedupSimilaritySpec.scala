@@ -574,11 +574,51 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("tracked dedup caches drain after releaseCaches") {
-    Dedup.releaseCaches() // start clean regardless of suite order
+    import graft.llm.{Bpe, LanguageModel, Lines, Mixing, TrackedFrames, Unigram}
+    // every owner of tracked frames: one tracking operator, its frames
+    // and its public releaseCaches() delegate
+    val owners: Seq[(String, TrackedFrames, () => Unit, () => Unit)] = Seq(
+      ("Dedup", Dedup.tracked,
+        () => Dedup.minhashClusters(docs, "doc_id", "text").count(),
+        () => Dedup.releaseCaches()),
+      ("Mixing", Mixing.tracked,
+        () => Mixing.tokenBudgetSelect(docs, "text", "doc_id", 20L).count(),
+        () => Mixing.releaseCaches()),
+      ("Lines", Lines.tracked,
+        () => Lines.stripBoilerplate(docs, "doc_id", "text", 2).count(),
+        () => Lines.releaseCaches()),
+      ("Bpe", Bpe.tracked,
+        () => Bpe.encodeDocs(docs, "doc_id", "text", Seq(("t", "h"))).count(),
+        () => Bpe.releaseCaches()),
+      ("LanguageModel", LanguageModel.tracked,
+        () => LanguageModel.unigramScore(docs, "doc_id", "text").count(),
+        () => LanguageModel.releaseCaches()),
+      ("Unigram", Unigram.tracked,
+        () => Unigram.train(docs, "text", vocabSize = 50, iters = 1,
+          seedSize = 200).count(),
+        () => Unigram.releaseCaches()))
+    TrackedFrames.releaseQuery() // start clean regardless of suite order
+    // each owner's own releaseCaches() drains that owner
+    owners.foreach { case (name, frames, run, releaseCaches) =>
+      run()
+      assert(frames.size > 0, s"$name should track its frames")
+      releaseCaches()
+      assert(frames.size == 0, s"$name.releaseCaches() must drain $name")
+    }
     Dedup.minhashClusters(docs, "doc_id", "text").count()
     assert(Dedup.trackedCacheCount > 0, "minhashClusters should track its persist")
     Dedup.releaseCaches()
+    assert(Dedup.trackedCacheCount == 0, "releaseCaches must drain the queue")
+    // the drivers' per-query release leaves every owner empty
+    owners.foreach { case (_, _, run, _) => run() }
+    owners.foreach { case (name, frames, _, _) =>
+      assert(frames.size > 0, s"$name should track its frames")
+    }
+    TrackedFrames.releaseQuery()
     assert(Dedup.trackedCacheCount == 0, "release must drain the queue")
+    owners.foreach { case (name, frames, _, _) =>
+      assert(frames.size == 0, s"release must drain $name")
+    }
   }
 
   test("contamination: full overlap = 1.0, disjoint = 0.0, partial in between") {

@@ -3,8 +3,9 @@ package graft
 import graft.ml.ModelStore
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** End-to-end §3.1 topology: trainer -> predictor -> label updater over
   * one MemoryStream feed, exactly the reference's three-query session.
@@ -73,6 +74,29 @@ class StreamJobsSpec extends SparkSpec {
     // served rows fall inside the 200.0-avg windows -> labels rewritten
     val labels = after.select("label").as[Double].collect().distinct
     assert(labels.forall(_ == 200.0), s"labels not backfilled: ${labels.toSeq}")
+  }
+
+  test("label updater fails with the serving store's read error") {
+    implicit val sqlCtx = spark.sqlContext
+    val boom = new java.io.IOException("serving store unreadable")
+    // the store exists but cannot be read: the back-fill must fail,
+    // not skip the batch as if there were nothing to update
+    val serving = new KeyedStore {
+      def upsert(batch: DataFrame): Unit = ()
+      def read(spark: SparkSession): DataFrame = throw boom
+      def exists: Boolean = true
+    }
+    val mem = MemoryStream[Ticks.MarketTickTuple]
+    mem.addData((0 until 10).map(i => tick(base + i * 60000L, 200.0)))
+    val updater = StreamJobs.labelUpdater(
+      StreamOps.windowedFeatureAvg()(feed(mem)), serving,
+      s"${tmpDir("jobs_unreadable")}/ckpt_lbl", Trigger.ProcessingTime(10L))
+    val err =
+      try intercept[StreamingQueryException](updater.processAllAvailable())
+      finally updater.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.contains(boom), s"cause chain: $causes")
   }
 
   test("scoreDual joins stream and history predictions per key") {

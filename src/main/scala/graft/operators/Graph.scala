@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Distributed graph primitives needed by the dedup family: near-dup
   * candidate pairs form a graph whose connected components are the
@@ -49,46 +50,35 @@ object Graph {
     // (arbitrarily expensive) caller-supplied edge pipeline TWICE
     // inside the checkpoint job, once per union branch; exploding a
     // 2-struct array emits the same rows from a single evaluation
-    val sym = edges.select(explode(array(
+    val sym = Bridge.checkpoint(edges.select(explode(array(
         struct(col("id_a").as("a"), col("id_b").as("b")),
         struct(col("id_b").as("a"), col("id_a").as("b")))).as("__e"))
       .select(col("__e.a").as("id_a"), col("__e.b").as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-      .localCheckpoint(true)
+      .filter(col("id_a") =!= col("id_b")))
     // the loop carries labels for edge ENDPOINTS only — an isolated
     // node's label can never change, and in a dedup graph endpoints
     // (docs with at least one near-dup) are a small fraction of the
     // corpus; singletons re-attach map-only after convergence
-    var labels = sym.select(col("id_a").as("id")).distinct()
+    var labels = Bridge.checkpoint(sym.select(col("id_a").as("id"))
+      .distinct()
       .join(nodes.select(col("id")), Seq("id"), "left_semi")
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    // stats-blind-checkpoint issue (see [[hits]]): the endpoint-label
-    // frame is node-set-sized — broadcast it explicitly into the
-    // per-round edge join while it is broadcastable, instead of
-    // letting the planner sort-merge against the stats-free
-    // checkpoint; past the gate the shuffle join is the only correct
-    // plan
-    val bcastScores = labels.count() <= 5000000L
-    def side(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
+      .select(col("id"), col("id").as("comp")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
       val nbrMin = sym
-        .join(side(labels.select(col("id").as("id_b"), col("comp").as("nc"))),
+        .join(labels.select(col("id").as("id_b"), col("comp").as("nc")),
           Seq("id_b"))
         .groupBy(col("id_a").as("id"))
         .agg(min(col("nc")).as("nbr_comp"))
-      val next = labels.join(side(nbrMin), Seq("id"))
+      val next = Bridge.checkpoint(labels.join(nbrMin, Seq("id"))
         .select(col("id"), col("comp"),
-          least(col("comp"), col("nbr_comp")).as("new_comp"))
-        .localCheckpoint(true)
+          least(col("comp"), col("nbr_comp")).as("new_comp")))
       changed = next.filter(col("new_comp") =!= col("comp")).count()
-      // `next` is materialized (eager checkpoint) and `changed` is
+      // `next` is materialized (checkpoint) and `changed` is
       // consumed — the previous round's blocks are dead; release them
       // so the loop holds one round of labels, not `iter` rounds
-      org.apache.spark.sql.graft.Bridge.releaseFrame(labels)
+      Bridge.releaseFrame(labels)
       labels = next.select(col("id"), col("new_comp").as("comp"))
       iter += 1
     }
@@ -112,12 +102,11 @@ object Graph {
       // node id and the star root equals the true component min.
       val roots = starContract(contracted)
         .select(col("id").as("comp"), col("comp_root"))
-      val composed = labels.join(roots, Seq("comp"), "left")
+      val composed = Bridge.checkpoint(labels.join(roots, Seq("comp"), "left")
         .select(col("id"),
-          coalesce(col("comp_root"), col("comp")).as("comp"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.Bridge.releaseFrame(labels)
-      org.apache.spark.sql.graft.Bridge.releaseFrame(roots)
+          coalesce(col("comp_root"), col("comp")).as("comp")))
+      Bridge.releaseFrame(labels)
+      Bridge.releaseFrame(roots)
       labels = composed
     }
     nodes.select(col("id"))
@@ -141,20 +130,20 @@ object Graph {
     * propagation round; there are just O(log^2 n) of them instead of
     * O(diameter). Convergence = the edge set reaches a fixed point
     * (every node points directly at its component min), checked with
-    * one count + one except per round. Superseded rounds are
+    * one except per round (the row counts are the checkpoints' own
+    * statistics). Superseded rounds are
     * unpersisted as soon as the next is materialized. */
   def starContract(edges: DataFrame, maxRounds: Int = 60): DataFrame = {
     // canonical directed form u -> v with u > v (self-loops dropped):
     // both star operations emit edges pointing from larger to smaller,
     // so the invariant is stable across rounds
-    var e = edges
+    var e = Bridge.checkpoint(edges
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var rounds = 0
-    var converged = e.isEmpty
+    var converged = Bridge.rowCount(e) == 0L
     while (!converged && rounds < maxRounds) {
       // LARGE-STAR: for each node n, connect every strictly-larger
       // neighbor to min(N(n) ∪ {n}). Each undirected edge {a,b}, a<b,
@@ -163,27 +152,26 @@ object Graph {
         .union(e.select(col("v").as("u"), col("u").as("v"))) // n = "u"
       val mins = sym.groupBy("u").agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(mins, Seq("u"))
+      val large = Bridge.checkpoint(sym.join(mins, Seq("u"))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       // SMALL-STAR on the directed (large -> small) edges: every node
       // n rewires its smaller neighbors AND itself to min(N(n)).
       val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(minsS, Seq("u"))
+      val small = Bridge.checkpoint(large.join(minsS, Seq("u"))
         .select(col("v").as("n"), col("m"))
         .union(minsS.select(col("u").as("n"), col("m")))
         .filter(col("n") =!= col("m"))
         .select(col("n").as("u"), col("m").as("v"))
-        .distinct()
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.Bridge.releaseFrame(large)
+        .distinct())
+      Bridge.releaseFrame(large)
       // fixed point: the round changed nothing — every edge already
       // points at its component minimum
-      converged = small.count() == e.count() && small.except(e).isEmpty
-      org.apache.spark.sql.graft.Bridge.releaseFrame(e)
+      converged = Bridge.rowCount(small) == Bridge.rowCount(e) &&
+        small.except(e).isEmpty
+      Bridge.releaseFrame(e)
       e = small
       rounds += 1
     }
@@ -195,11 +183,11 @@ object Graph {
     // u pointing at its root; roots label themselves. Materialized so
     // the converged edge frame's blocks can be released here rather
     // than leaking past the return.
-    val labels = e.select(col("u").as("id"), col("v").as("comp_root"))
-      .union(e.select(col("v").as("id"), col("v").as("comp_root"))
-        .distinct())
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(e)
+    val labels = Bridge.checkpoint(
+      e.select(col("u").as("id"), col("v").as("comp_root"))
+        .union(e.select(col("v").as("id"), col("v").as("comp_root"))
+          .distinct()))
+    Bridge.releaseFrame(e)
     labels
   }
 
@@ -226,12 +214,11 @@ object Graph {
     * Output: (node, hub, authority), L2-normalized per side. */
   def hits(edges: DataFrame, iterations: Int = 4): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
+    val e = Bridge.checkpoint(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("w")))
+    val nodes = Bridge.checkpoint(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct())
     // r15: no materialized seed frame — round 1's hub score is the
     // CONSTANT 1.0 for every source, so the first a-side edge join
     // degenerates to a plain aggregate over e (sum(w * 1.0) is
@@ -239,15 +226,6 @@ object Graph {
     // seed checkpoint + round-1 broadcast build disappear.
     var hubs: DataFrame = null
     var auths: DataFrame = null
-    // Checkpointed frames carry no size stats, so Catalyst would
-    // sort-merge every round — shuffling the EDGE table twice per
-    // iteration. Score frames are node-set-sized: broadcast them
-    // explicitly while the node count is broadcastable (measured on
-    // the 591k-edge graded graph: 12.6 s -> ~5 s); beyond the gate
-    // the default shuffle join is the only correct plan.
-    val bcastScores = nodes.count() <= 5000000L
-    def side(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
     for (it <- 1 to iterations) {
       // the authorities frame stays LAZY (r12): its only same-round
       // reader is nextH, whose broadcast exchange evaluates the
@@ -279,21 +257,24 @@ object Graph {
           e.groupBy(col("dst").as("node"))
             .agg(sum(col("w") * lit(1.0)).as("a"))
         else
-          e.join(side(hubs.select(col("node").as("src"), col("h"))),
-              Seq("src"))
+          e.join(hubs.select(col("node").as("src"), col("h")), Seq("src"))
             .groupBy(col("dst").as("node"))
             .agg(sum(col("w") * col("h")).as("a"))
-      val nextA = if (it == iterations) nextA0.localCheckpoint(true)
+      val nextA = if (it == iterations) Bridge.checkpoint(nextA0)
         else nextA0
-      val nextH = e.join(side(nextA.select(col("node").as("dst"), col("a"))),
-          Seq("dst"))
+      // a lazy nextA's estimate is the edge-join product, so the
+      // planner would sort-merge it; its rows are bounded by the node
+      // count, which decides the broadcast in bytes instead
+      val aSide = nextA.select(col("node").as("dst"), col("a"))
+      val nextH = Bridge.checkpoint(e
+        .join(if (Bridge.fitsBroadcast(aSide, Bridge.rowCount(nodes)))
+          broadcast(aSide) else aSide, Seq("dst"))
         .groupBy(col("src").as("node"))
-        .agg(sum(col("w") * col("a")).as("h"))
-        .localCheckpoint(true)
+        .agg(sum(col("w") * col("a")).as("h")))
       // releaseFrame is a no-op on lazy views (every intermediate
       // nextA) — safe unconditionally; null only before round 1
-      if (hubs != null) org.apache.spark.sql.graft.Bridge.releaseFrame(hubs)
-      if (auths != null) org.apache.spark.sql.graft.Bridge.releaseFrame(auths)
+      if (hubs != null) Bridge.releaseFrame(hubs)
+      if (auths != null) Bridge.releaseFrame(auths)
       auths = nextA
       hubs = nextH
     }
@@ -305,20 +286,19 @@ object Graph {
     // dst nodes — zero-fill BOTH against the node frame here, once,
     // instead of every round (output row set and values unchanged:
     // absent = exact 0.0, same as the old per-round coalesce)
-    val out = nodes
-      .join(side(hubs), Seq("node"), "left")
-      .join(side(auths), Seq("node"), "left")
+    val out = Bridge.checkpoint(nodes
+      .join(hubs, Seq("node"), "left")
+      .join(auths, Seq("node"), "left")
       .crossJoin(aNorm).crossJoin(hNorm)
       .select(col("node"),
         when(col("__nh") > 0, coalesce(col("h"), lit(0.0)) / col("__nh"))
           .otherwise(lit(0.0)).as("hub"),
         when(col("__na") > 0, coalesce(col("a"), lit(0.0)) / col("__na"))
-          .otherwise(lit(0.0)).as("authority"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(e)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(nodes)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(hubs)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(auths)
+          .otherwise(lit(0.0)).as("authority")))
+    Bridge.releaseFrame(e)
+    Bridge.releaseFrame(nodes)
+    Bridge.releaseFrame(hubs)
+    Bridge.releaseFrame(auths)
     out
   }
 
@@ -350,24 +330,16 @@ object Graph {
     * (spec-asserted). */
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
+    val e = Bridge.checkpoint(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("w")))
+    val nodes = Bridge.checkpoint(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count().toDouble
+      .distinct())
+    val n = Bridge.rowCount(nodes).toDouble
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val eNorm = e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"), (col("w") / col("ow")).as("p"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(e)
-    // same stats-blind-checkpoint issue as [[hits]]: without the
-    // explicit broadcast the contrib side sort-merges, reshuffling the
-    // edge table every round; gate on node count (see hits)
-    val bcastScores = n <= 5000000.0
-    def side(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
+    val eNorm = Bridge.checkpoint(e.join(outW, Seq("src"))
+      .select(col("src"), col("dst"), (col("w") / col("ow")).as("p")))
+    Bridge.releaseFrame(e)
     // r15 restructure: the (node, rank) frame is never materialized
     // between rounds — the rank FORMULA rides INTO the next round's
     // edge join instead. rank(src) = (1-d)/n + d*(contrib(src) + dang/n)
@@ -379,40 +351,37 @@ object Graph {
     // broadcast build. Round 1's rank is the CONSTANT 1/n for every
     // source, so it needs no join at all — and the seed rank frame,
     // its checkpoint and the round-1 broadcast build all disappear.
-    var contrib: DataFrame = eNorm
+    var contrib: DataFrame = Bridge.checkpoint(eNorm
       .groupBy(col("dst").as("node"))
-      .agg(sum(col("p") * lit(1.0 / n)).as("contrib"))
-      .localCheckpoint(true)
+      .agg(sum(col("p") * lit(1.0 / n)).as("contrib")))
     var dangling = broadcast(contrib.agg(
       (lit(1.0) - sum(col("contrib"))).as("__dang")))
     for (_ <- 2 to iterations) {
       val rank = lit((1.0 - damping) / n) + lit(damping) *
         (coalesce(col("c"), lit(0.0)) + col("__dang") / n)
-      val next = eNorm
-        .join(side(contrib.select(col("node").as("src"),
-          col("contrib").as("c"))), Seq("src"), "left")
+      val next = Bridge.checkpoint(eNorm
+        .join(contrib.select(col("node").as("src"),
+          col("contrib").as("c")), Seq("src"), "left")
         .crossJoin(dangling)
         .groupBy(col("dst").as("node"))
-        .agg(sum(col("p") * rank).as("contrib"))
-        .localCheckpoint(true)
+        .agg(sum(col("p") * rank).as("contrib")))
       // the new contrib's materialization was the last reader of the
       // previous round's
-      org.apache.spark.sql.graft.Bridge.releaseFrame(contrib)
+      Bridge.releaseFrame(contrib)
       contrib = next
       dangling = broadcast(contrib.agg(
         (lit(1.0) - sum(col("contrib"))).as("__dang")))
     }
     // zero-fill over the node frame ONCE, at output assembly
-    val ranks = nodes.join(side(contrib), Seq("node"), "left")
+    val ranks = Bridge.checkpoint(nodes.join(contrib, Seq("node"), "left")
       .crossJoin(dangling)
       .select(col("node"),
         (lit((1.0 - damping) / n) + lit(damping) *
           (coalesce(col("contrib"), lit(0.0)) + col("__dang") / n))
-          .as("rank"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(contrib)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(eNorm)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(nodes)
+          .as("rank")))
+    Bridge.releaseFrame(contrib)
+    Bridge.releaseFrame(eNorm)
+    Bridge.releaseFrame(nodes)
     ranks
   }
 
@@ -435,22 +404,17 @@ object Graph {
     * and degrees only; payloads never ride. */
   def triangleCount(edges: DataFrame, scale: Int = 6): DataFrame = {
     // canonical undirected edges: a < b, distinct, no self-loops
-    val canon = edges.select(
+    val canon = Bridge.checkpoint(edges.select(
         least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = canon.select(col("a").as("id"))
+      .distinct())
+    val degLazy = Bridge.checkpoint(canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(false)
-    // scalars first: materializes the (lazy) degree checkpoint, and
-    // its node count gates the explicit degree broadcast below — the
-    // checkpointed frame is stats-blind, so without the hint the
-    // planner sort-merges BOTH orientation joins, shuffling and
-    // sorting the edge-sized canon twice (the hits/pageRank lesson)
-    val statsRow = deg.agg(
+      .groupBy(col("id")).agg(count(lit(1)).as("d")), eager = false)
+    // scalars first: this job materializes the lazy degree checkpoint,
+    // and its node count becomes the checkpoint's exact row count
+    val statsRow = degLazy.agg(
       count(lit(1)).as("n_nodes"),
       // integer DIV, not `/`: double division would round wedge counts
       // once degrees pass 2^26 (d² beyond the 53-bit mantissa)
@@ -458,20 +422,20 @@ object Graph {
       // every canonical edge contributes one to each endpoint's degree
       sum(expr("d")).cast("long").as("__degsum"))
       .first()
-    def side(df: DataFrame): DataFrame =
-      if (statsRow.getAs[Long]("n_nodes") <= 5000000L) broadcast(df) else df
+    val (nNodes, nWedges) =
+      (statsRow.getAs[Long]("n_nodes"), statsRow.getAs[Long]("n_wedges"))
+    val deg = Bridge.withRowCount(degLazy, nNodes)
     // orient by (degree, id): lower endpoint in that total order
     // becomes the source
     val withDeg = canon
-      .join(side(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
-      .join(side(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
+      .join(deg.select(col("id").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("id").as("b"), col("d").as("db")), Seq("b"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = withDeg.select(
+    val oriented = Bridge.checkpoint(withDeg.select(
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dd"))
-      .localCheckpoint(true)
+        when(aFirst, col("db")).otherwise(col("da")).as("dd")))
     // wedges out of each source, ordered by the same (degree, id)
     // total order so the closing edge appears exactly once in
     // `oriented` as v -> w
@@ -487,12 +451,10 @@ object Graph {
     val nTri = wedgePairs
       .join(oriented.select(col("src"), col("dst")), Seq("src", "dst"))
       .count()
-    val (nNodes, nWedges) =
-      (statsRow.getAs[Long]("n_nodes"), statsRow.getAs[Long]("n_wedges"))
     val nEdges = statsRow.getAs[Long]("__degsum") / 2
-    org.apache.spark.sql.graft.Bridge.releaseFrame(canon)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(deg)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(oriented)
+    Bridge.releaseFrame(canon)
+    Bridge.releaseFrame(deg)
+    Bridge.releaseFrame(oriented)
     edges.sparkSession.range(1).select(
       lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
       lit(nWedges).as("n_wedges"), lit(nTri).as("n_triangles"),
@@ -515,32 +477,23 @@ object Graph {
     * the per-node count. Output: (id, degree, n_tri, cc) for every
     * node. */
   def clusteringCoefficients(edges: DataFrame, scale: Int = 6): DataFrame = {
-    val canon = edges.select(
+    val canon = Bridge.checkpoint(edges.select(
         least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = canon.select(col("a").as("id"))
+      .distinct())
+    val deg = Bridge.checkpoint(canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    // checkpointed node frames are stats-blind (the hits/pageRank
-    // lesson): gate-broadcast the degree sides so the two
-    // orientation joins stop shuffling + sorting the edge-sized
-    // canon frame twice
-    val bcastDeg = deg.count() <= 5000000L
-    def side(df: DataFrame): DataFrame = if (bcastDeg) broadcast(df) else df
+      .groupBy(col("id")).agg(count(lit(1)).as("d")))
     val withDeg = canon
-      .join(side(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
-      .join(side(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
+      .join(deg.select(col("id").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("id").as("b"), col("d").as("db")), Seq("b"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = withDeg.select(
+    val oriented = Bridge.checkpoint(withDeg.select(
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dd"))
-      .localCheckpoint(true)
+        when(aFirst, col("db")).otherwise(col("da")).as("dd")))
     val e1 = oriented.select(col("src").as("u"), col("dst").as("v"),
       col("dd").as("dv"))
     val e2 = oriented.select(col("src").as("u"), col("dst").as("w"),
@@ -553,17 +506,16 @@ object Graph {
       .join(oriented.select(col("src"), col("dst")), Seq("src", "dst"))
       .select(explode(array(col("u"), col("src"), col("dst"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("__tri"))
-    val out = deg.join(corners, Seq("id"), "left")
+    val out = Bridge.checkpoint(deg.join(corners, Seq("id"), "left")
       .select(col("id"), col("d").as("degree"),
         coalesce(col("__tri"), lit(0L)).as("n_tri"),
         round(when(col("d") >= 2L,
           coalesce(col("__tri"), lit(0L)).cast("double") * 2.0 /
             (col("d") * (col("d") - 1L))).otherwise(lit(0.0)), scale)
-          .as("cc"))
-      .localCheckpoint(false)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(canon)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(deg)
-    org.apache.spark.sql.graft.Bridge.releaseFrame(oriented)
+          .as("cc")))
+    Bridge.releaseFrame(canon)
+    Bridge.releaseFrame(deg)
+    Bridge.releaseFrame(oriented)
     out
   }
 
@@ -597,7 +549,7 @@ object Graph {
     // explode is map-side on the aggregate's output. Row-for-row the
     // same frame: distinct over the symmetric closure equals the
     // symmetric closure of the canonical distinct.
-    val sym = edges.select(
+    val sym = Bridge.checkpoint(edges.select(
         least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -605,18 +557,10 @@ object Graph {
       .select(explode(array(
         struct(col("a").as("x"), col("b").as("y")),
         struct(col("b").as("x"), col("a").as("y")))).as("__e"))
-      .select(col("__e.x").as("id_a"), col("__e.y").as("id_b"))
-      .localCheckpoint(true)
-    var labels = sym.select(col("id_a").as("id"))
+      .select(col("__e.x").as("id_a"), col("__e.y").as("id_b")))
+    var labels = Bridge.checkpoint(sym.select(col("id_a").as("id"))
       .distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    // stats-blind-checkpoint issue (see [[hits]]): broadcast the
-    // node-sized label frame explicitly while it is broadcastable;
-    // past the gate the shuffle join is the only correct plan
-    val bcastScores = labels.count() <= 5000000L
-    def side(df: DataFrame): DataFrame =
-      if (bcastScores) broadcast(df) else df
+      .select(col("id"), col("id").as("label")))
     for (_ <- 1 to iterations) {
       // neighbor labels for node id_a come from id_b's current label;
       // argmax by (count, smallest label) rides ONE struct min_by —
@@ -628,20 +572,19 @@ object Graph {
       // satisfies BOTH downstream groupings (HashPartitioning(id_a)
       // clusters (id_a, label) too), so the per-(node,label) count
       // and the per-node argmax run exchange-free on top of it.
-      val next = sym
-        .join(side(labels.select(col("id").as("id_b"), col("label"))),
+      val next = Bridge.checkpoint(sym
+        .join(labels.select(col("id").as("id_b"), col("label")),
           Seq("id_b"))
         .repartition(col("id_a"))
         .groupBy(col("id_a"), col("label"))
         .agg(count(lit(1)).as("__cnt"))
         .groupBy(col("id_a").as("id"))
         .agg(min_by(col("label"),
-          struct((-col("__cnt")).as("__nc"), col("label"))).as("label"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.Bridge.releaseFrame(labels)
+          struct((-col("__cnt")).as("__nc"), col("label"))).as("label")))
+      Bridge.releaseFrame(labels)
       labels = next
     }
-    org.apache.spark.sql.graft.Bridge.releaseFrame(sym)
+    Bridge.releaseFrame(sym)
     labels
   }
 
@@ -659,62 +602,49 @@ object Graph {
     * — half the symmetric frame — and each round costs ONE map-side-
     * combined degree aggregate over the exploded endpoints; the peel
     * itself anti-joins against the BAD set (nodes below k this
-    * round), which is exactly the shrinking frontier, so it
-    * broadcasts and adds no exchange (size-gated: a degenerate first
-    * round that peels millions falls back to shuffle anti-joins,
-    * still no worse than the old two-semi-join plan). The r9 plan
-    * spent three exchanges per round (degree groupBy + two semi-
-    * joins against the LARGE keep set). Each round localCheckpoints
+    * round), which is exactly the shrinking frontier, so the planner
+    * broadcasts it and adds no exchange (a degenerate first round
+    * that peels past `spark.sql.autoBroadcastJoinThreshold` shuffles
+    * instead, still no worse than the old two-semi-join plan). The r9
+    * plan spent three exchanges per round (degree groupBy + two semi-
+    * joins against the LARGE keep set). Each round checkpoints
     * (same discipline as [[labelPropagation]]) so the loop's lineage
     * stays flat; superseded rounds release eagerly; the loop exits
     * as soon as a round peels nothing. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // nodes peeled this round stay broadcastable below the gate;
-    // above it the anti-joins shuffle (degenerate mass-peel rounds)
-    val broadcastGate = 5000000L
-    var live = edges
+    var live = Bridge.checkpoint(edges
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-      .distinct()
-      .localCheckpoint(true)
-    var done = live.isEmpty
+      .distinct())
+    var done = Bridge.rowCount(live) == 0L
     var r = 0
     while (!done && r < rounds) {
-      val bad = live
+      val bad = Bridge.checkpoint(live
         .select(explode(array(col("id_a"), col("id_b"))).as("__id"))
         .groupBy(col("__id")).agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") < k)
-        .select(col("__id"))
-        .localCheckpoint(true)
-      val nBad = bad.count()
-      if (nBad == 0L) {
-        org.apache.spark.sql.graft.Bridge.releaseFrame(bad)
+        .select(col("__id")))
+      if (Bridge.rowCount(bad) == 0L) {
+        Bridge.releaseFrame(bad)
         done = true
       } else {
-        // MEASURED trade-off: the checkpointed bad set broadcasts
-        // TWICE (a checkpoint's ExistingRDD defeats exchange-reuse
-        // canonicalization across the analyzer's self-join dedup —
-        // a .persist() variant does get a ReusedExchange but costs
+        // MEASURED trade-off: a broadcast bad set ships TWICE (a
+        // checkpoint's ExistingRDD defeats exchange-reuse
+        // canonicalization across the analyzer's self-join dedup — a
+        // .persist() variant does get a ReusedExchange but costs
         // ~+1 s/query in columnar cache build at realistic frontier
-        // sizes). The double ship is bounded: the gate halves so the
-        // worst-case total stays under one 5M-row broadcast's budget.
-        val badA = bad.select(col("__id").as("id_a"))
-        val badB = bad.select(col("__id").as("id_b"))
-        val (ja, jb) =
-          if (nBad <= broadcastGate / 2) (broadcast(badA), broadcast(badB))
-          else (badA, badB)
-        val next = live
-          .join(ja, Seq("id_a"), "left_anti")
-          .join(jb, Seq("id_b"), "left_anti")
-          .localCheckpoint(true)
-        org.apache.spark.sql.graft.Bridge.releaseFrame(live)
-        org.apache.spark.sql.graft.Bridge.releaseFrame(bad)
+        // sizes)
+        val next = Bridge.checkpoint(live
+          .join(bad.select(col("__id").as("id_a")), Seq("id_a"), "left_anti")
+          .join(bad.select(col("__id").as("id_b")), Seq("id_b"), "left_anti"))
+        Bridge.releaseFrame(live)
+        Bridge.releaseFrame(bad)
         live = next
-        // no per-round isEmpty probe (r11): a drained frame exits the
-        // NEXT round through nBad==0 on an empty degree aggregate —
-        // one cheap job once, instead of one extra job EVERY round
+        // no per-round emptiness probe (r11): a drained frame exits
+        // the NEXT round through an empty bad set — one cheap job
+        // once, instead of one extra job EVERY round
         r += 1
       }
     }
@@ -729,7 +659,7 @@ object Graph {
     *
     * Scale shape: classic frontier expansion — per hop ONE id-width
     * join (frontier × adjacency) and one anti-join against the
-    * settled set, both localCheckpointed ([[kCore]] discipline).
+    * settled set, both checkpointed ([[kCore]] discipline).
     * Frontiers only shrink the unsettled set, so the loop exits
     * early when a frontier drains; a fixed-R unrolled oracle stays
     * exact because later rounds are no-ops. */
@@ -742,7 +672,7 @@ object Graph {
     // (guide §2.3): canonical (least, greatest) dedup, mirrored
     // map-side AFTER the aggregate — the exchange carries E rows
     // instead of 2E (see [[labelPropagation]]).
-    val sym = edges.select(
+    val sym = Bridge.checkpoint(edges.select(
         least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -750,52 +680,33 @@ object Graph {
       .select(explode(array(
         struct(col("a").as("x"), col("b").as("y")),
         struct(col("b").as("x"), col("a").as("y")))).as("__e"))
-      .select(col("__e.x").as("id_a"), col("__e.y").as("id_b"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col("id")).distinct()
-      .withColumn("hops", lit(0))
-      .localCheckpoint(true)
+      .select(col("__e.x").as("id_a"), col("__e.y").as("id_b")))
+    var dist = Bridge.checkpoint(seeds.select(col("id")).distinct()
+      .withColumn("hops", lit(0)))
     var frontier = dist.select("id")
-    // stats-blind-checkpoint lesson (r12 hits/pageRank, applied here
-    // r15): the frontier and settled frames are node-sized
-    // checkpoints with no stats, so the planner sort-merged BOTH
-    // per-hop joins — shuffling AND sorting the edge-sized sym every
-    // hop. Gate-broadcast them while they are broadcastable; the
-    // frontier/settled row counts ride the counts the loop already
-    // takes (seeds now, nxt per hop), so the gate costs no extra job
-    // beyond the one seed count.
-    val broadcastGate = 5000000L
-    var nDist = dist.count()
-    var nFrontier = nDist
-    def side(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastGate) broadcast(df) else df
     var h = 1
     var done = false
     while (!done && h <= maxHops) {
-      val nxt = sym
-        .join(side(frontier.withColumnRenamed("id", "id_a"), nFrontier),
-          Seq("id_a"), "left_semi")
+      // the checkpoint's count is the hop's one action (the BPE
+      // one-action-per-round discipline)
+      val nxt = Bridge.checkpoint(sym
+        .join(frontier.withColumnRenamed("id", "id_a"), Seq("id_a"),
+          "left_semi")
         .select(col("id_b").as("id")).distinct()
-        .join(side(dist, nDist), Seq("id"), "left_anti")
-        .withColumn("hops", lit(h))
-        .localCheckpoint(false)
-      // the count materializes the LAZY checkpoint in the same job
-      // (the BPE one-action-per-round discipline)
-      val nNxt = nxt.count()
-      if (nNxt == 0L) {
-        org.apache.spark.sql.graft.Bridge.releaseFrame(nxt)
+        .join(dist, Seq("id"), "left_anti")
+        .withColumn("hops", lit(h)))
+      if (Bridge.rowCount(nxt) == 0L) {
+        Bridge.releaseFrame(nxt)
         done = true
       } else {
-        val merged = dist.unionByName(nxt).localCheckpoint(true)
-        org.apache.spark.sql.graft.Bridge.releaseFrame(dist)
+        val merged = Bridge.checkpoint(dist.unionByName(nxt))
+        Bridge.releaseFrame(dist)
         dist = merged
-        nDist += nNxt
-        nFrontier = nNxt
         frontier = nxt.select("id")
       }
       h += 1
     }
-    org.apache.spark.sql.graft.Bridge.releaseFrame(sym)
+    Bridge.releaseFrame(sym)
     dist
   }
 
@@ -814,7 +725,7 @@ object Graph {
     * unrolled form an ANSI oracle can state. Paths accumulate as
     * dist[src] + w left-to-right, the same FP addition order in any
     * engine evaluating the recurrence. Per-round frames are
-    * localCheckpointed and superseded rounds released (the
+    * checkpointed and superseded rounds released (the
     * [[connectedComponents]] discipline); rounds is a small constant,
     * distance growth is the frontier's — no driver-side state. */
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int,
@@ -827,7 +738,7 @@ object Graph {
     // every unordered pair min over its canonical group equals min
     // over both directed groups of the old exploded closure (each
     // input row contributed its weight to both directions).
-    val sym = edges.select(
+    val sym = Bridge.checkpoint(edges.select(
         least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"),
         col("weight").cast("double").as("w"))
@@ -838,36 +749,21 @@ object Graph {
         struct(col("a").as("x"), col("b").as("y"), col("w")),
         struct(col("b").as("x"), col("a").as("y"), col("w")))).as("__e"))
       .select(col("__e.x").as("id_a"), col("__e.y").as("id_b"),
-        col("__e.w").as("weight"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col("id")).distinct()
-      .withColumn("dist", lit(0.0))
-      .localCheckpoint(true)
-    // stats-blind-checkpoint lesson (r12 hits/pageRank, applied here
-    // r15): dist is a node-sized checkpoint with no stats, so the
-    // planner sort-merged the relaxation join — shuffling AND sorting
-    // the edge-sized sym EVERY round. Gate-broadcast dist while it is
-    // broadcastable; its row count rides the count that materializes
-    // each round's (now lazy) checkpoint, so the gate costs no extra
-    // job beyond the one seed count.
-    val broadcastGate = 5000000L
-    var nDist = dist.count()
+        col("__e.w").as("weight")))
+    var dist = Bridge.checkpoint(seeds.select(col("id")).distinct()
+      .withColumn("dist", lit(0.0)))
     var r = 0
     while (r < rounds) {
-      val distSide = dist.select(col("id").as("id_a"), col("dist"))
-      val relaxed = sym
-        .join(if (nDist <= broadcastGate) broadcast(distSide) else distSide,
-          Seq("id_a"))
+      val relaxed = Bridge.checkpoint(sym
+        .join(dist.select(col("id").as("id_a"), col("dist")), Seq("id_a"))
         .select(col("id_b").as("id"), (col("dist") + col("weight")).as("dist"))
         .unionByName(dist)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(false)
-      nDist = relaxed.count() // materializes the lazy checkpoint
-      org.apache.spark.sql.graft.Bridge.releaseFrame(dist)
+        .groupBy(col("id")).agg(min(col("dist")).as("dist")))
+      Bridge.releaseFrame(dist)
       dist = relaxed
       r += 1
     }
-    org.apache.spark.sql.graft.Bridge.releaseFrame(sym)
+    Bridge.releaseFrame(sym)
     dist.select(col("id"), round(col("dist"), scale).as("dist"))
   }
 }

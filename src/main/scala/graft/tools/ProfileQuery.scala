@@ -4,6 +4,10 @@ import graft.{Bench, SparkEntry}
 import graft.llm.TrackedFrames
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graft.Bridge
 import scala.collection.mutable
 
 /** Per-job wall-clock profile of one or more queries — the
@@ -13,7 +17,10 @@ import scala.collection.mutable
   * (count), and prints one line per job of the LAST rep: job id,
   * wall ms, number of stages/tasks, and the job group/description —
   * so per-round actions of iterative operators are individually
-  * visible. Task time is summed executor runtime (cpu proxy).
+  * visible. Task time is summed executor runtime (cpu proxy). A
+  * `summary` line per query counts the rep's jobs and the joins of
+  * each SQL execution's last plan (AQE re-plans included): iterative
+  * operators plan their rounds' joins before the final `explain`.
   *
   *   sbt -batch "runMain graft.tools.ProfileQuery q1,q2 [reps]"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
@@ -23,6 +30,12 @@ object ProfileQuery {
     var desc: String = "", var nStages: Int = 0, var nTasks: Int = 0,
     var taskMs: Long = 0L, var gcMs: Long = 0L, var cpuMs: Long = 0L,
     var fetchMs: Long = 0L, var deserMs: Long = 0L)
+
+  private val joinKinds = Seq("BroadcastHashJoin", "SortMergeJoin",
+    "ShuffledHashJoin", "BroadcastNestedLoopJoin")
+
+  private def nodeNames(p: SparkPlanInfo): Seq[String] =
+    p.nodeName +: p.children.flatMap(nodeNames)
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQuery <q1,q2,...> [reps]")
@@ -38,8 +51,18 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
+    // execution id -> last reported physical plan
+    val plans = mutable.LinkedHashMap[Long, SparkPlanInfo]()
     @volatile var collecting = false
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (collecting) e match {
+          case s: SparkListenerSQLExecutionStart =>
+            plans.synchronized { plans(s.executionId) = s.sparkPlanInfo }
+          case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+            plans.synchronized { plans(u.executionId) = u.sparkPlanInfo }
+          case _ => ()
+        }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (collecting) {
           val r = JobRec(e.jobId, t0 = e.time)
@@ -72,16 +95,19 @@ object ProfileQuery {
       val fn = SparkEntry.queries(n)
       var wall = 0.0
       for (rep <- 1 to reps) {
+        // drained around the flag flips: the rep gets exactly its events
+        Bridge.drainListenerBus(spark)
         jobs.synchronized { jobs.clear() }
+        plans.synchronized { plans.clear() }
         collecting = rep == reps // profile the steady-state rep
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         wall = (System.nanoTime() - t0) / 1e9
+        Bridge.drainListenerBus(spark)
         collecting = false
         TrackedFrames.releaseQuery()
         println(f"[profile] $n rep $rep wall ${wall}%.3f s")
       }
-      Thread.sleep(300) // let the listener bus drain the last job's events
       println(f"[profile] $n last-rep jobs (wall ${wall}%.3f s):")
       var sumMs = 0L
       jobs.synchronized {
@@ -92,6 +118,9 @@ object ProfileQuery {
         }
       }
       println(f"[profile] $n sum-of-job-wall ${sumMs / 1000.0}%.3f s (gaps = driver/planning)")
+      val names = plans.synchronized(plans.values.flatMap(nodeNames).toSeq)
+      println(s"[profile] $n summary jobs=${jobs.synchronized(jobs.size)} " +
+        joinKinds.map(k => s"$k=${names.count(_ == k)}").mkString(" "))
     }
     spark.stop()
   }

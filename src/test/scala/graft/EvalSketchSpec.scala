@@ -284,16 +284,18 @@ class EvalSketchSpec extends SparkSpec {
 
   test("sssp: relaxation through a cheaper two-hop path") {
     // 1-2 (w=1), 2-3 (w=1), 1-3 (w=5): dist(3) = 2 via 2, not 5 direct
-    val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 5.0))
-      .toDF("id_a", "id_b", "weight")
-    val seeds = Seq(Tuple1(1L)).toDF("id")
-    val m3 = graft.operators.Graph.sssp(edges, seeds, 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(m3 == Map(1L -> 0.0, 2L -> 1.0, 3L -> 2.0))
-    // with a single round only the direct edge is visible
-    val m1 = graft.operators.Graph.sssp(edges, seeds, 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(m1(3L) == 5.0)
+    forEachBroadcastThreshold {
+      val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 5.0))
+        .toDF("id_a", "id_b", "weight")
+      val seeds = Seq(Tuple1(1L)).toDF("id")
+      val m3 = graft.operators.Graph.sssp(edges, seeds, 3)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(m3 == Map(1L -> 0.0, 2L -> 1.0, 3L -> 2.0))
+      // with a single round only the direct edge is visible
+      val m1 = graft.operators.Graph.sssp(edges, seeds, 1)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(m1(3L) == 5.0)
+    }
   }
 
   test("sssp: undirected symmetrization and isolated seeds") {

@@ -278,21 +278,23 @@ class PropertySpec extends SparkSpec {
       es <- Gen.listOfN(m,
         Gen.zip(Gen.chooseNum(0L, n - 1L), Gen.chooseNum(0L, n - 1L)))
     } yield (n, es)
-    samples(gen, 12).foreach { case (n, es) =>
-      val parent = Array.tabulate(n.toInt)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    forEachBroadcastThreshold {
+      samples(gen, 12).foreach { case (n, es) =>
+        val parent = Array.tabulate(n.toInt)(identity)
+        def find(x: Int): Int =
+          if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+        es.foreach { case (a, b) =>
+          val (ra, rb) = (find(a.toInt), find(b.toInt))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val expected = (0 until n.toInt)
+          .map(i => i.toLong -> find(i).toLong).toMap
+        val nodes = (0L until n.toLong).toDF("id")
+        val edges = es.toDF("id_a", "id_b")
+        val got = Graph.connectedComponents(nodes, edges)
+          .as[(Long, Long)].collect().toMap
+        assert(got == expected, s"n=$n edges=$es")
       }
-      val expected = (0 until n.toInt)
-        .map(i => i.toLong -> find(i).toLong).toMap
-      val nodes = (0L until n.toLong).toDF("id")
-      val edges = es.toDF("id_a", "id_b")
-      val got = Graph.connectedComponents(nodes, edges)
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"n=$n edges=$es")
     }
   }
 
@@ -315,23 +317,25 @@ class PropertySpec extends SparkSpec {
       es <- Gen.listOfN(m,
         Gen.zip(Gen.chooseNum(0L, n - 1L), Gen.chooseNum(0L, n - 1L)))
     } yield (n, es)
-    samples(gen, 10).foreach { case (n, es) =>
-      val parent = Array.tabulate(n.toInt)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    forEachBroadcastThreshold {
+      samples(gen, 10).foreach { case (n, es) =>
+        val parent = Array.tabulate(n.toInt)(identity)
+        def find(x: Int): Int =
+          if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+        es.foreach { case (a, b) =>
+          val (ra, rb) = (find(a.toInt), find(b.toInt))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        // starContract labels edge ENDPOINTS only (no self-loop-only or
+        // isolated nodes) — compare over exactly that set
+        val endpoints = es.flatMap { case (a, b) => Seq(a, b) }
+          .filter(x => es.exists { case (p, q) => p != q && (p == x || q == x) })
+          .distinct
+        val expected = endpoints.map(i => i -> find(i.toInt).toLong).toMap
+        val got = Graph.starContract(es.toDF("id_a", "id_b"))
+          .as[(Long, Long)].collect().toMap
+        assert(got == expected, s"n=$n edges=$es")
       }
-      // starContract labels edge ENDPOINTS only (no self-loop-only or
-      // isolated nodes) — compare over exactly that set
-      val endpoints = es.flatMap { case (a, b) => Seq(a, b) }
-        .filter(x => es.exists { case (p, q) => p != q && (p == x || q == x) })
-        .distinct
-      val expected = endpoints.map(i => i -> find(i.toInt).toLong).toMap
-      val got = Graph.starContract(es.toDF("id_a", "id_b"))
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"n=$n edges=$es")
     }
   }
 
@@ -717,22 +721,24 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Graph
     val edgeGen = Gen.listOfN(60,
       Gen.zip(Gen.chooseNum(0L, 19L), Gen.chooseNum(0L, 19L)))
-    samples(edgeGen, 5).foreach { raw =>
-      val canon = raw.collect { case (a, b) if a != b =>
-        (math.min(a, b), math.max(a, b)) }.toSet
-      val adj = canon.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-        .withDefaultValue(Set.empty[Long])
-      val nodes = canon.flatMap(e => Seq(e._1, e._2))
-      // adj holds only min->max edges, so a common neighbor of (a,b)
-      // satisfies c > b > a — each triangle counted exactly once, at
-      // its lowest edge
-      val expTri = canon.toSeq.map { case (a, b) =>
-        (adj(a) intersect adj(b)).size }.sum
-      val r = Graph.triangleCount(raw.toDF("id_a", "id_b")).collect().head
-      assert(r.getAs[Long]("n_triangles") == expTri.toLong,
-        s"edges=$canon got=$r expected=$expTri")
-      assert(r.getAs[Long]("n_edges") == canon.size.toLong)
-      assert(r.getAs[Long]("n_nodes") == nodes.size.toLong)
+    forEachBroadcastThreshold {
+      samples(edgeGen, 5).foreach { raw =>
+        val canon = raw.collect { case (a, b) if a != b =>
+          (math.min(a, b), math.max(a, b)) }.toSet
+        val adj = canon.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+          .withDefaultValue(Set.empty[Long])
+        val nodes = canon.flatMap(e => Seq(e._1, e._2))
+        // adj holds only min->max edges, so a common neighbor of (a,b)
+        // satisfies c > b > a — each triangle counted exactly once, at
+        // its lowest edge
+        val expTri = canon.toSeq.map { case (a, b) =>
+          (adj(a) intersect adj(b)).size }.sum
+        val r = Graph.triangleCount(raw.toDF("id_a", "id_b")).collect().head
+        assert(r.getAs[Long]("n_triangles") == expTri.toLong,
+          s"edges=$canon got=$r expected=$expTri")
+        assert(r.getAs[Long]("n_edges") == canon.size.toLong)
+        assert(r.getAs[Long]("n_nodes") == nodes.size.toLong)
+      }
     }
   }
 
@@ -740,35 +746,37 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Graph
     val edgeGen = Gen.listOfN(50,
       Gen.zip(Gen.chooseNum(0L, 15L), Gen.chooseNum(0L, 15L)))
-    samples(edgeGen, 5).foreach { raw =>
-      val canon = raw.collect { case (a, b) if a != b =>
-        (math.min(a, b), math.max(a, b)) }.toSet
-      if (canon.nonEmpty) {
-        val k = 3
-        // reference: peel to fixpoint on adjacency sets
-        var adj = scala.collection.mutable.Map[Long, Set[Long]]()
-          .withDefaultValue(Set.empty)
-        canon.foreach { case (a, b) =>
-          adj(a) = adj(a) + b; adj(b) = adj(b) + a
-        }
-        var changed = true
-        while (changed) {
-          val drop = adj.filter(_._2.size < k).keys.toSet
-          changed = drop.nonEmpty
-          if (changed) {
-            drop.foreach(adj.remove)
-            adj = adj.map { case (n, s) => n -> (s -- drop) }
-              .withDefaultValue(Set.empty)
+    forEachBroadcastThreshold {
+      samples(edgeGen, 5).foreach { raw =>
+        val canon = raw.collect { case (a, b) if a != b =>
+          (math.min(a, b), math.max(a, b)) }.toSet
+        if (canon.nonEmpty) {
+          val k = 3
+          // reference: peel to fixpoint on adjacency sets
+          var adj = scala.collection.mutable.Map[Long, Set[Long]]()
+            .withDefaultValue(Set.empty)
+          canon.foreach { case (a, b) =>
+            adj(a) = adj(a) + b; adj(b) = adj(b) + a
           }
+          var changed = true
+          while (changed) {
+            val drop = adj.filter(_._2.size < k).keys.toSet
+            changed = drop.nonEmpty
+            if (changed) {
+              drop.foreach(adj.remove)
+              adj = adj.map { case (n, s) => n -> (s -- drop) }
+                .withDefaultValue(Set.empty)
+            }
+          }
+          val want = adj.map { case (n, s) => n -> s.size.toLong }.toMap
+          val got = Graph.kCore(canon.toSeq.toDF("id_a", "id_b"), k,
+              rounds = 16).collect()
+            .map(r => r.getAs[Long]("id") -> r.getAs[Long]("core_degree"))
+            .toMap
+          assert(got === want, s"edges=$canon")
+          // fixpoint: every surviving node keeps degree >= k
+          assert(got.values.forall(_ >= k))
         }
-        val want = adj.map { case (n, s) => n -> s.size.toLong }.toMap
-        val got = Graph.kCore(canon.toSeq.toDF("id_a", "id_b"), k,
-            rounds = 16).collect()
-          .map(r => r.getAs[Long]("id") -> r.getAs[Long]("core_degree"))
-          .toMap
-        assert(got === want, s"edges=$canon")
-        // fixpoint: every surviving node keeps degree >= k
-        assert(got.values.forall(_ >= k))
       }
     }
   }

@@ -418,27 +418,29 @@ class SessionsPiiSpec extends SparkSpec {
   // ---- PageRank ----
 
   test("pageRank matches a reference power iteration incl. dangling mass") {
-    val edges = Seq(("A", "B", 1.0), ("A", "D", 1.0), ("B", "C", 1.0),
-      ("C", "A", 1.0)).toDF("src", "dst", "weight")
-    val got = graft.operators.Graph.pageRank(edges, 10, 0.85)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // reference: driver-side power iteration with the same semantics
-    // (D has no out-edges — its mass redistributes uniformly)
-    val nodes = Seq("A", "B", "C", "D")
-    val out = Map("A" -> Seq(("B", 0.5), ("D", 0.5)),
-      "B" -> Seq(("C", 1.0)), "C" -> Seq(("A", 1.0)))
-    var rank = nodes.map(_ -> 0.25).toMap
-    for (_ <- 1 to 10) {
-      val dang = rank("D")
-      val contrib = scala.collection.mutable.Map(nodes.map(_ -> 0.0): _*)
-      for ((s, outs) <- out; (d2, p) <- outs) contrib(d2) += rank(s) * p
-      rank = nodes.map(n =>
-        n -> (0.15 / 4 + 0.85 * (contrib(n) + dang / 4))).toMap
+    forEachBroadcastThreshold {
+      val edges = Seq(("A", "B", 1.0), ("A", "D", 1.0), ("B", "C", 1.0),
+        ("C", "A", 1.0)).toDF("src", "dst", "weight")
+      val got = graft.operators.Graph.pageRank(edges, 10, 0.85)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      // reference: driver-side power iteration with the same semantics
+      // (D has no out-edges — its mass redistributes uniformly)
+      val nodes = Seq("A", "B", "C", "D")
+      val out = Map("A" -> Seq(("B", 0.5), ("D", 0.5)),
+        "B" -> Seq(("C", 1.0)), "C" -> Seq(("A", 1.0)))
+      var rank = nodes.map(_ -> 0.25).toMap
+      for (_ <- 1 to 10) {
+        val dang = rank("D")
+        val contrib = scala.collection.mutable.Map(nodes.map(_ -> 0.0): _*)
+        for ((s, outs) <- out; (d2, p) <- outs) contrib(d2) += rank(s) * p
+        rank = nodes.map(n =>
+          n -> (0.15 / 4 + 0.85 * (contrib(n) + dang / 4))).toMap
+      }
+      nodes.foreach(n =>
+        assert(math.abs(got(n) - rank(n)) < 1e-9, s"node $n: ${got(n)} vs ${rank(n)}"))
+      // total rank is conserved (teleport + dangling redistribution)
+      assert(math.abs(got.values.sum - 1.0) < 1e-9)
     }
-    nodes.foreach(n =>
-      assert(math.abs(got(n) - rank(n)) < 1e-9, s"node $n: ${got(n)} vs ${rank(n)}"))
-    // total rank is conserved (teleport + dangling redistribution)
-    assert(math.abs(got.values.sum - 1.0) < 1e-9)
   }
 
   test("allocateToDays: midnight-spanning interval splits exactly, zero-length kept") {
@@ -471,15 +473,17 @@ class SessionsPiiSpec extends SparkSpec {
     // cliques {1,2,3} and {10,11,12} joined by one bridge edge 3-10;
     // 3 synchronous rounds with smallest-label ties must put each
     // clique in one community and keep the cliques apart
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L))
-      .toDF("id_a", "id_b")
-    val got = graft.operators.Graph.labelPropagation(edges, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.keySet == Set(1L, 2L, 3L, 10L, 11L, 12L))
-    assert(Set(got(1L), got(2L), got(3L)).size == 1)
-    assert(Set(got(10L), got(11L), got(12L)).size == 1)
-    assert(got(1L) != got(10L))
+    forEachBroadcastThreshold {
+      val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
+        (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L))
+        .toDF("id_a", "id_b")
+      val got = graft.operators.Graph.labelPropagation(edges, 3)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.keySet == Set(1L, 2L, 3L, 10L, 11L, 12L))
+      assert(Set(got(1L), got(2L), got(3L)).size == 1)
+      assert(Set(got(10L), got(11L), got(12L)).size == 1)
+      assert(got(1L) != got(10L))
+    }
   }
 
   test("labelPropagation: string node ids keep smallest-label ties") {
@@ -520,36 +524,38 @@ class SessionsPiiSpec extends SparkSpec {
   }
 
   test("hits matches a reference mutual-reinforcement iteration") {
-    val edges = Seq(("s1", "p1", 2.0), ("s1", "p2", 1.0), ("s2", "p1", 1.0))
-      .toDF("src", "dst", "weight")
-    val got = graft.operators.Graph.hits(edges, 4)
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2)))
-      .toMap
-    // driver-side reference with identical semantics (raw rounds,
-    // single end normalization — scalar norms can't change direction)
-    val out = Map("s1" -> Seq(("p1", 2.0), ("p2", 1.0)),
-      "s2" -> Seq(("p1", 1.0)))
-    val nodes = Seq("s1", "s2", "p1", "p2")
-    var h = nodes.map(_ -> 1.0).toMap
-    var a = Map.empty[String, Double]
-    for (_ <- 1 to 4) {
-      a = nodes.map(n => n -> out.toSeq.flatMap { case (s, es) =>
-        es.collect { case (d, w) if d == n => w * h(s) } }.sum).toMap
-      h = nodes.map(n => n -> out.getOrElse(n, Nil)
-        .map { case (d, w) => w * a(d) }.sum).toMap
+    forEachBroadcastThreshold {
+      val edges = Seq(("s1", "p1", 2.0), ("s1", "p2", 1.0), ("s2", "p1", 1.0))
+        .toDF("src", "dst", "weight")
+      val got = graft.operators.Graph.hits(edges, 4)
+        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2)))
+        .toMap
+      // driver-side reference with identical semantics (raw rounds,
+      // single end normalization — scalar norms can't change direction)
+      val out = Map("s1" -> Seq(("p1", 2.0), ("p2", 1.0)),
+        "s2" -> Seq(("p1", 1.0)))
+      val nodes = Seq("s1", "s2", "p1", "p2")
+      var h = nodes.map(_ -> 1.0).toMap
+      var a = Map.empty[String, Double]
+      for (_ <- 1 to 4) {
+        a = nodes.map(n => n -> out.toSeq.flatMap { case (s, es) =>
+          es.collect { case (d, w) if d == n => w * h(s) } }.sum).toMap
+        h = nodes.map(n => n -> out.getOrElse(n, Nil)
+          .map { case (d, w) => w * a(d) }.sum).toMap
+      }
+      val an = math.sqrt(a.values.map(v => v * v).sum)
+      val hn = math.sqrt(h.values.map(v => v * v).sum)
+      a = a.map { case (n, v) => n -> (if (an > 0) v / an else 0.0) }
+      h = h.map { case (n, v) => n -> (if (hn > 0) v / hn else 0.0) }
+      nodes.foreach { n =>
+        assert(math.abs(got(n)._1 - h(n)) < 1e-9, s"hub $n")
+        assert(math.abs(got(n)._2 - a(n)) < 1e-9, s"auth $n")
+      }
+      // bipartite role separation: sources have no authority, sinks no hub
+      assert(got("s1")._2 == 0.0 && got("p1")._1 == 0.0)
+      // the heavier-linked part is the stronger authority
+      assert(got("p1")._2 > got("p2")._2)
     }
-    val an = math.sqrt(a.values.map(v => v * v).sum)
-    val hn = math.sqrt(h.values.map(v => v * v).sum)
-    a = a.map { case (n, v) => n -> (if (an > 0) v / an else 0.0) }
-    h = h.map { case (n, v) => n -> (if (hn > 0) v / hn else 0.0) }
-    nodes.foreach { n =>
-      assert(math.abs(got(n)._1 - h(n)) < 1e-9, s"hub $n")
-      assert(math.abs(got(n)._2 - a(n)) < 1e-9, s"auth $n")
-    }
-    // bipartite role separation: sources have no authority, sinks no hub
-    assert(got("s1")._2 == 0.0 && got("p1")._1 == 0.0)
-    // the heavier-linked part is the stronger authority
-    assert(got("p1")._2 > got("p2")._2)
   }
 
   test("stratifiedWeightedTake: exact k per stratum, agrees with global scorer") {

@@ -408,19 +408,21 @@ class TrendAnalyticsSpec extends SparkSpec {
   test("bfsHops: path distances, cap, and disconnected nodes") {
     import graft.operators.Graph
     // path 1-2-3-4-5-6 plus isolated edge 10-11; seed = {1}
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (10L, 11L)).toDF("id_a", "id_b")
-    val seeds = Seq(1L).toDF("id")
-    val got = Graph.bfsHops(edges, seeds, maxHops = 3).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Int]("hops")).toMap
-    // nodes past the cap (5, 6) and the disconnected pair don't emit
-    assert(got === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
+    forEachBroadcastThreshold {
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+        (10L, 11L)).toDF("id_a", "id_b")
+      val seeds = Seq(1L).toDF("id")
+      val got = Graph.bfsHops(edges, seeds, maxHops = 3).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Int]("hops")).toMap
+      // nodes past the cap (5, 6) and the disconnected pair don't emit
+      assert(got === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
 
-    // two seeds: nearest-seed distance wins
-    val two = Graph.bfsHops(edges, Seq(1L, 6L).toDF("id"), 3).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Int]("hops")).toMap
-    assert(two === Map(1L -> 0, 6L -> 0, 2L -> 1, 5L -> 1,
-      3L -> 2, 4L -> 2))
+      // two seeds: nearest-seed distance wins
+      val two = Graph.bfsHops(edges, Seq(1L, 6L).toDF("id"), 3).collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Int]("hops")).toMap
+      assert(two === Map(1L -> 0, 6L -> 0, 2L -> 1, 5L -> 1,
+        3L -> 2, 4L -> 2))
+    }
   }
 
   // ---- survivorship dedup ----

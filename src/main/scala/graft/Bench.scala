@@ -1,6 +1,5 @@
 package graft
 import graft.llm.TrackedFrames
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** The bench's self-defense rules (r12), pure so the spec can drive
@@ -129,7 +128,7 @@ object BenchRules {
       .map(_.group(1)).getOrElse("")
 
   /** (queries_min, measured-at-sf); empty map when the file is
-    * absent/unreadable. */
+    * absent or unreadable (the cause goes to stderr). */
   def loadBaseline(path: String): (Map[String, Double], String) =
     try {
       val p = java.nio.file.Paths.get(path)
@@ -138,7 +137,10 @@ object BenchRules {
         (parseBaseline(line), parseBaselineSf(line))
       } else (Map.empty, "")
     } catch {
-      case scala.util.control.NonFatal(_) => (Map.empty, "")
+      case NonFatal(e) =>
+        System.err.println(s"[bench] baseline $path unreadable: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+        (Map.empty, "")
     }
 }
 
@@ -173,40 +175,18 @@ object BenchRules {
   * per-query min / retry values for the flagged queries.
   */
 object Bench {
-
-  /** Untimed warm-up: JVM/codegen startup and the first parquet-footer
-    * reads otherwise land entirely on whichever query runs first. */
-  def warmUp(spark: SparkSession, sfDir: String): Unit =
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("q_pricing_summary")
-        .foreach(fn => fn(spark, sfDir).count())
-    } catch {
-      case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e")
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    warmUp(spark, sfDir)
-    // -1 marks a failed run; the cause goes to stderr
-    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).count()
-      catch {
-        case NonFatal(e) =>
-          System.err.println(
-            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
+    // Optional comma-separated query filter for isolated A/B runs
+    // (sweep-pressure outliers need re-measuring alone before being
+    // banked as noise — VERDICT r5 §wrong-2).
+    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(Harness.select(_).toSet)
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    // -1 marks a failed run; the harness prints the cause to stderr
+    def once(name: String, fn: Harness.Query): Double = {
+      val r = Harness.run(spark, sfDir, "bench", name, fn)(_.count())
+      if (r.ok) r.seconds else -1.0
     }
     // Contention canary: three cheap, plan-stable queries (scan+agg,
     // filter, explode+agg shapes) timed as one probe. All plans are
@@ -227,11 +207,6 @@ object Bench {
       val (a, b) = (canaryPass(), canaryPass())
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
     }
-    // Optional comma-separated query filter for isolated A/B runs
-    // (sweep-pressure outliers need re-measuring alone before being
-    // banked as noise — VERDICT r5 §wrong-2).
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None        => SparkEntry.queries
@@ -259,11 +234,11 @@ object Bench {
     // (a one-time constant a resident cluster session amortizes away),
     // and the median of the remaining steady-state runs absorbs one-off
     // GC/scheduler noise that min-of-two let through. Cold-start
-    // behavior is characterized separately in README/SCALING.md.
+    // behavior is characterized separately in README/SCALING.md. Each
+    // run releases its tracked frames, so runs 2 and 3 recompute them
+    // instead of reading run 1's cached blocks.
     val results = selected.map { case (name, fn) =>
       val runs = Seq(once(name, fn), once(name, fn), once(name, fn))
-      // per-query frames must not accumulate across the full sweep
-      TrackedFrames.releaseQuery()
       i += 1
       if (canaryOn && i == half) canaryMid = canaryProbe()
       val failed = runs.exists(_ < 0)
@@ -287,9 +262,7 @@ object Bench {
     val retryTriples = BenchRules.retryList(results.toSeq, baseline)
       .map { name =>
         val probe = if (canaryOn) canaryProbe() else -1.0
-        val t = once(name, selected(name))
-        TrackedFrames.releaseQuery()
-        (name, t, probe)
+        (name, once(name, selected(name)), probe)
       }
     val retries = retryTriples.map { case (n, t, _) => n -> t }
     val retryCanary = retryTriples.map { case (n, _, p) => n -> p }

@@ -1,8 +1,5 @@
 package graft
-import graft.llm.TrackedFrames
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,31 +7,13 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for isolated
     // re-verification of a subset (mirrors Bench's subset filter)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2).map(Harness.select(_).toSet)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(
-          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-      }
-      // a driver running all queries must not accumulate every
-      // query's tracked frames
-      TrackedFrames.releaseQuery()
+    val names = SparkEntry.queries.keys.filter(n => only.forall(_(n))).toSeq
+    Harness.runAll(spark, sfDir, "verify", names) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    TrackedFrames.releaseAll()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -22,13 +22,16 @@ object Harness {
   private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
     .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
 
-  /** `local[n]` with `n` shuffle partitions, UTC, no UI, WARN logs. */
+  /** `local[n]` with `n` shuffle partitions, UTC, no UI, WARN logs;
+    * parquet TIMESTAMP(NANOS) read as a long, which `Tables.load` turns
+    * into a timestamp (the test tables' events.ts). */
   def session(n: Int = cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$n]")
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -125,8 +125,7 @@ object Geo {
     * runs on the CELL frame (bounded by occupied-cell count, not
     * rows); the point labeling is one broadcast-sized join back. */
   def gridDbscan(df: DataFrame, latCol: String, lonCol: String,
-      idCol: String, cellDeg: Double, minPts: Long,
-      driverGate: Long = 200000L): DataFrame = {
+      idCol: String, cellDeg: Double, minPts: Long): DataFrame = {
     require(cellDeg > 0.002, "cellDeg too fine for the cell-id encoding")
     require(minPts >= 1L)
     val enc = 100000L
@@ -138,20 +137,24 @@ object Geo {
     val pts = df.select(col(idCol), cellId)
     val counts = pts.groupBy(col("__cell")).agg(count(lit(1)).as("__n"))
     val core = counts.filter(col("__n") >= minPts).select(col("__cell"))
-    // The component solve is SIZE-GATED (the corr-matrix /
-    // leakageSafeSplitAuto pattern): the core-cell frame is bounded by
-    // the GRID (and further by the point count), not by the data, so
-    // below the gate a driver-side BFS over the collected cell set —
-    // adjacency is pure arithmetic, no edge frame at all — replaces
-    // ~15 iterative-CC scheduling rounds (measured 7.9 s -> 1.5 s at
-    // sf0.1). Above the gate (continental 0.01° grids) the exact
-    // distributed path runs: 8-neighbor equi-join edges +
-    // connectedComponents, whose star-contraction fallback handles the
-    // long-diameter components grid graphs produce.
-    val nCore = core.count()
-    val cellCluster =
-      if (nCore <= driverGate) {
-        val cells = core.collect().map(_.getLong(0))
+    // The component solve is SIZE-GATED in bytes, by the planner's
+    // broadcast rule (`spark.sql.autoBroadcastJoinThreshold`): the
+    // core-cell frame is bounded by the GRID (and further by the point
+    // count), not by the data, so below the gate — one
+    // `limit(cap + 1)` collect decides and fetches — a driver-side BFS
+    // over the collected cell set (adjacency is pure arithmetic, no
+    // edge frame at all) replaces ~15 iterative-CC scheduling rounds
+    // (measured 7.9 s -> 1.5 s at sf0.1). Above the gate (continental
+    // 0.01° grids), or at a threshold of -1, the exact distributed
+    // path runs: 8-neighbor equi-join edges + connectedComponents,
+    // whose star-contraction fallback handles the long-diameter
+    // components grid graphs produce.
+    val spark = df.sparkSession
+    val gated = DriverLocal.labelled(spark, "geo.gridDbscan gate")(
+      DriverLocal.collectIfFits(core))
+    val cellCluster = gated match {
+      case Some(rows) =>
+        val cells = rows.map(_.getLong(0))
         val coreSet = cells.toSet
         val label = scala.collection.mutable.Map[Long, Long]()
         cells.sorted.foreach { c =>
@@ -180,9 +183,9 @@ object Geo {
             comp.foreach(m => label(m) = root)
           }
         }
-        import df.sparkSession.implicits._
+        import spark.implicits._
         broadcast(label.toSeq.toDF("__cell", "__cluster"))
-      } else {
+      case None => DriverLocal.labelled(spark, "geo.gridDbscan distributed") {
         val nbrs = core.withColumn("__o", explode(offsets9))
           .select(col("__cell"),
             (col("__cell") + col("__o.dx") * enc + col("__o.dy"))
@@ -196,6 +199,7 @@ object Geo {
           .select(col("id").as("__cell"),
             col("component_id").as("__cluster"))
       }
+    }
     val off = offsets9
     val corePts = pts.join(cellCluster, Seq("__cell"))
       .select(col(idCol), col("__cluster").as("cluster"))

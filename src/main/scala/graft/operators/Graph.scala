@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Distributed graph primitives needed by the dedup family: near-dup
   * candidate pairs form a graph whose connected components are the
@@ -327,18 +329,44 @@ object Graph {
     * checkpoints release once the next is materialized
     * ([[connectedComponents]] discipline), so block usage stays one
     * round deep. Total rank sums to 1 every iteration
-    * (spec-asserted). */
+    * (spec-asserted).
+    *
+    * Edges whose exact size passes the broadcast byte gate
+    * ([[DriverLocal]]) run the same recurrence on the driver and come
+    * back as a `LocalRelation` of the same schema; only the order in
+    * which each sum adds its terms differs, so ranks agree with the
+    * distributed path to a few ulps. Weights must be positive, as the
+    * out-weight normalization divides by them. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
-    val e = Bridge.checkpoint(edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w")))
-    val nodes = Bridge.checkpoint(e.select(col("src").as("node"))
+    val spark = edges.sparkSession
+    val e = DriverLocal.labelled(spark, "graph.pageRank edges")(
+      Bridge.checkpoint(edges.select(col("src"), col("dst"),
+        col("weight").cast("double").as("w"))))
+    val allNodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct())
+      .distinct()
+    val node = allNodes.schema("node")
+    DriverLocal.edges(e, "pageRank", col("src").cast(node.dataType),
+        col("dst").cast(node.dataType), col("w")) match {
+      case Some(rows) =>
+        Bridge.releaseFrame(e)
+        spark.createDataFrame(localPageRank(rows, iterations, damping).asJava,
+          StructType(Seq(node, StructField("rank", DoubleType))))
+      case None => pageRankRounds(e, allNodes, iterations, damping)
+    }
+  }
+
+  /** [[pageRank]]'s distributed rounds over its checkpointed edges. */
+  private def pageRankRounds(e: DataFrame, allNodes: DataFrame,
+      iterations: Int, damping: Double): DataFrame = {
+    def inRound[A](r: Int)(body: => A): A =
+      DriverLocal.labelled(e.sparkSession, s"graph.pageRank round $r")(body)
+    val nodes = inRound(1)(Bridge.checkpoint(allNodes))
     val n = Bridge.rowCount(nodes).toDouble
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val eNorm = Bridge.checkpoint(e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"), (col("w") / col("ow")).as("p")))
+    val eNorm = inRound(1)(Bridge.checkpoint(e.join(outW, Seq("src"))
+      .select(col("src"), col("dst"), (col("w") / col("ow")).as("p"))))
     Bridge.releaseFrame(e)
     // r15 restructure: the (node, rank) frame is never materialized
     // between rounds — the rank FORMULA rides INTO the next round's
@@ -351,20 +379,20 @@ object Graph {
     // broadcast build. Round 1's rank is the CONSTANT 1/n for every
     // source, so it needs no join at all — and the seed rank frame,
     // its checkpoint and the round-1 broadcast build all disappear.
-    var contrib: DataFrame = Bridge.checkpoint(eNorm
+    var contrib: DataFrame = inRound(1)(Bridge.checkpoint(eNorm
       .groupBy(col("dst").as("node"))
-      .agg(sum(col("p") * lit(1.0 / n)).as("contrib")))
+      .agg(sum(col("p") * lit(1.0 / n)).as("contrib"))))
     var dangling = broadcast(contrib.agg(
       (lit(1.0) - sum(col("contrib"))).as("__dang")))
-    for (_ <- 2 to iterations) {
+    for (r <- 2 to iterations) {
       val rank = lit((1.0 - damping) / n) + lit(damping) *
         (coalesce(col("c"), lit(0.0)) + col("__dang") / n)
-      val next = Bridge.checkpoint(eNorm
+      val next = inRound(r)(Bridge.checkpoint(eNorm
         .join(contrib.select(col("node").as("src"),
           col("contrib").as("c")), Seq("src"), "left")
         .crossJoin(dangling)
         .groupBy(col("dst").as("node"))
-        .agg(sum(col("p") * rank).as("contrib")))
+        .agg(sum(col("p") * rank).as("contrib"))))
       // the new contrib's materialization was the last reader of the
       // previous round's
       Bridge.releaseFrame(contrib)
@@ -373,16 +401,46 @@ object Graph {
         (lit(1.0) - sum(col("contrib"))).as("__dang")))
     }
     // zero-fill over the node frame ONCE, at output assembly
-    val ranks = Bridge.checkpoint(nodes.join(contrib, Seq("node"), "left")
-      .crossJoin(dangling)
-      .select(col("node"),
-        (lit((1.0 - damping) / n) + lit(damping) *
-          (coalesce(col("contrib"), lit(0.0)) + col("__dang") / n))
-          .as("rank")))
+    val ranks = inRound(iterations)(Bridge.checkpoint(
+      nodes.join(contrib, Seq("node"), "left")
+        .crossJoin(dangling)
+        .select(col("node"),
+          (lit((1.0 - damping) / n) + lit(damping) *
+            (coalesce(col("contrib"), lit(0.0)) + col("__dang") / n))
+            .as("rank"))))
     Bridge.releaseFrame(contrib)
     Bridge.releaseFrame(eNorm)
     Bridge.releaseFrame(nodes)
     ranks
+  }
+
+  /** [[pageRank]]'s recurrence over collected (src, dst, w) rows, term
+    * for term the distributed arithmetic; only the order in which each
+    * sum adds its terms differs. One (node, rank) row per endpoint. */
+  private def localPageRank(rows: Array[Row], iterations: Int,
+      damping: Double): Seq[Row] = {
+    val ids = new DriverLocal.Ids
+    val src = rows.map(r => ids(r.get(0)))
+    val dst = rows.map(r => ids(r.get(1)))
+    val w = rows.map(_.getDouble(2))
+    val n = ids.size.toDouble
+    val outW = new Array[Double](ids.size)
+    w.indices.foreach(i => outW(src(i)) += w(i))
+    val p = Array.tabulate(w.length)(i => w(i) / outW(src(i)))
+    def rank(c: Double, dang: Double) =
+      (1.0 - damping) / n + damping * (c + dang / n)
+    var contrib = new Array[Double](ids.size)
+    p.indices.foreach(i => contrib(dst(i)) += p(i) * (1.0 / n))
+    for (_ <- 2 to iterations) {
+      val dang = 1.0 - contrib.sum
+      val next = new Array[Double](ids.size)
+      p.indices.foreach { i =>
+        next(dst(i)) += p(i) * rank(contrib(src(i)), dang)
+      }
+      contrib = next
+    }
+    val dang = 1.0 - contrib.sum
+    ids.ids.indices.map(v => Row(ids.ids(v), rank(contrib(v), dang)))
   }
 
   /** Exact triangle count + global clustering coefficient over an
@@ -401,14 +459,38 @@ object Graph {
     * orientation-minimal vertex, so the count is exact, not sampled:
     * wedge (v,w) out of u closes iff oriented edge v→w exists —
     * one equi-join against the oriented edge list. Frames carry ids
-    * and degrees only; payloads never ride. */
+    * and degrees only; payloads never ride. Canonical edges that pass
+    * the broadcast byte gate ([[DriverLocal]]) are counted on the
+    * driver instead, with the same orientation; the counts are exact
+    * either way. */
   def triangleCount(edges: DataFrame, scale: Int = 6): DataFrame = {
+    val spark = edges.sparkSession
     // canonical undirected edges: a < b, distinct, no self-loops
-    val canon = Bridge.checkpoint(edges.select(
-        least(col("id_a"), col("id_b")).as("a"),
-        greatest(col("id_a"), col("id_b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    val canon = DriverLocal.labelled(spark, "graph.triangleCount edges")(
+      Bridge.checkpoint(edges.select(
+          least(col("id_a"), col("id_b")).as("a"),
+          greatest(col("id_a"), col("id_b")).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()))
+    val (nNodes, nEdges, nWedges, nTri) =
+      DriverLocal.edges(canon, "triangleCount", col("a"), col("b")) match {
+        case Some(rows) =>
+          Bridge.releaseFrame(canon)
+          localTriangles(rows)
+        case None => DriverLocal.labelled(spark,
+          "graph.triangleCount distributed")(distributedTriangles(canon))
+      }
+    spark.range(1).select(
+      lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
+      lit(nWedges).as("n_wedges"), lit(nTri).as("n_triangles"),
+      (if (nWedges > 0)
+        round(lit(3.0 * nTri / nWedges), scale).cast("double")
+      else lit(null).cast("double")).as("global_clustering"))
+  }
+
+  /** (nodes, edges, wedges, triangles) of [[triangleCount]]'s canonical
+    * edge checkpoint, by the distributed degree-orientation join. */
+  private def distributedTriangles(canon: DataFrame): (Long, Long, Long, Long) = {
     val degLazy = Bridge.checkpoint(canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d")), eager = false)
@@ -455,12 +537,30 @@ object Graph {
     Bridge.releaseFrame(canon)
     Bridge.releaseFrame(deg)
     Bridge.releaseFrame(oriented)
-    edges.sparkSession.range(1).select(
-      lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
-      lit(nWedges).as("n_wedges"), lit(nTri).as("n_triangles"),
-      (if (nWedges > 0)
-        round(lit(3.0 * nTri / nWedges), scale).cast("double")
-      else lit(null).cast("double")).as("global_clustering"))
+    (nNodes, nEdges, nWedges, nTri)
+  }
+
+  /** [[distributedTriangles]] over collected canonical (a, b) rows: the
+    * same (degree, index) orientation, each triangle counted once at
+    * its orientation-minimal vertex by marking its out-neighbors. */
+  private def localTriangles(rows: Array[Row]): (Long, Long, Long, Long) = {
+    val ids = new DriverLocal.Ids
+    val a = rows.map(r => ids(r.get(0)))
+    val b = rows.map(r => ids(r.get(1)))
+    val deg = new Array[Long](ids.size)
+    rows.indices.foreach { i => deg(a(i)) += 1; deg(b(i)) += 1 }
+    def first(x: Int, y: Int) = deg(x) < deg(y) || (deg(x) == deg(y) && x < y)
+    val out = Array.fill(ids.size)(scala.collection.mutable.ArrayBuffer[Int]())
+    rows.indices.foreach { i =>
+      if (first(a(i), b(i))) out(a(i)) += b(i) else out(b(i)) += a(i)
+    }
+    val mark = Array.fill(ids.size)(-1)
+    var tri = 0L
+    for (u <- out.indices) {
+      out(u).foreach(mark(_) = u)
+      for (v <- out(u); w <- out(v)) if (mark(w) == u) tri += 1
+    }
+    (ids.size.toLong, rows.length.toLong, deg.map(d => d * (d - 1) / 2).sum, tri)
   }
 
   /** PER-NODE local clustering coefficient: cc(v) = 2·T(v) /
@@ -610,17 +710,39 @@ object Graph {
     * joins against the LARGE keep set). Each round checkpoints
     * (same discipline as [[labelPropagation]]) so the loop's lineage
     * stays flat; superseded rounds release eagerly; the loop exits
-    * as soon as a round peels nothing. */
+    * as soon as a round peels nothing. Canonical edges that pass the
+    * broadcast byte gate ([[DriverLocal]]) are peeled on the driver,
+    * round for round the same, into a `LocalRelation` of the same
+    * schema. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var live = Bridge.checkpoint(edges
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-      .distinct())
+    val spark = edges.sparkSession
+    val live = DriverLocal.labelled(spark, "graph.kCore edges")(
+      Bridge.checkpoint(edges
+        .select(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b"))
+        .filter(col("id_a") =!= col("id_b"))
+        .distinct()))
+    def coreDegrees(live: DataFrame) =
+      live.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
+    DriverLocal.edges(live, "kCore", col("id_a"), col("id_b")) match {
+      case Some(rows) =>
+        Bridge.releaseFrame(live)
+        spark.createDataFrame(localKCore(rows, k, rounds).asJava,
+          coreDegrees(live).schema)
+      case None => coreDegrees(kCoreRounds(live, k, rounds))
+    }
+  }
+
+  /** [[kCore]]'s distributed peeling rounds over its canonical edge
+    * checkpoint; returns the surviving edges. */
+  private def kCoreRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    var live = edges
     var done = Bridge.rowCount(live) == 0L
     var r = 0
-    while (!done && r < rounds) {
+    while (!done && r < rounds) DriverLocal.labelled(live.sparkSession,
+        s"graph.kCore round ${r + 1}") {
       val bad = Bridge.checkpoint(live
         .select(explode(array(col("id_a"), col("id_b"))).as("__id"))
         .groupBy(col("__id")).agg(count(lit(1)).as("__deg"))
@@ -648,8 +770,33 @@ object Graph {
         r += 1
       }
     }
-    live.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
+    live
+  }
+
+  /** [[kCoreRounds]] over collected canonical (id_a, id_b) rows: each
+    * round drops the edges touching a node of degree below k, at most
+    * `rounds` peels; then one (id, core_degree) row per surviving
+    * endpoint. */
+  private def localKCore(rows: Array[Row], k: Int, rounds: Int): Seq[Row] = {
+    val ids = new DriverLocal.Ids
+    val a = rows.map(r => ids(r.get(0)))
+    val b = rows.map(r => ids(r.get(1)))
+    val deg = new Array[Long](ids.size)
+    def degrees(live: Array[Int]): Unit = {
+      java.util.Arrays.fill(deg, 0L)
+      live.foreach { i => deg(a(i)) += 1; deg(b(i)) += 1 }
+    }
+    var live = rows.indices.toArray
+    var done = live.isEmpty
+    var r = 0
+    while (!done && r < rounds) {
+      degrees(live)
+      val kept = live.filter(i => deg(a(i)) >= k && deg(b(i)) >= k)
+      if (kept.length == live.length) done = true
+      else { live = kept; r += 1 }
+    }
+    degrees(live)
+    deg.indices.filter(deg(_) > 0).map(v => Row(ids.ids(v), deg(v)))
   }
 
   /** Multi-source BFS hop distance: every node's distance (in hops)
@@ -727,10 +874,13 @@ object Graph {
     * engine evaluating the recurrence. Per-round frames are
     * checkpointed and superseded rounds released (the
     * [[connectedComponents]] discipline); rounds is a small constant,
-    * distance growth is the frontier's — no driver-side state. */
+    * distance growth is the frontier's. Edges and seeds that pass the
+    * broadcast byte gate ([[DriverLocal]]) relax on the driver with the
+    * same additions and comparisons, so distances are bit-identical. */
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int,
       scale: Int = 6): DataFrame = {
     require(rounds >= 1)
+    val spark = edges.sparkSession
     // single-pass symmetrize — see [[connectedComponents]] (r15).
     // Second pass (guide §2.3): the parallel-edge min-merge groups on
     // the CANONICAL (least, greatest) pair and mirrors AFTER the
@@ -738,32 +888,84 @@ object Graph {
     // every unordered pair min over its canonical group equals min
     // over both directed groups of the old exploded closure (each
     // input row contributed its weight to both directions).
-    val sym = Bridge.checkpoint(edges.select(
-        least(col("id_a"), col("id_b")).as("a"),
-        greatest(col("id_a"), col("id_b")).as("b"),
-        col("weight").cast("double").as("w"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(min(col("w")).as("w"))
-      .select(explode(array(
-        struct(col("a").as("x"), col("b").as("y"), col("w")),
-        struct(col("b").as("x"), col("a").as("y"), col("w")))).as("__e"))
-      .select(col("__e.x").as("id_a"), col("__e.y").as("id_b"),
-        col("__e.w").as("weight")))
-    var dist = Bridge.checkpoint(seeds.select(col("id")).distinct()
-      .withColumn("dist", lit(0.0)))
-    var r = 0
-    while (r < rounds) {
-      val relaxed = Bridge.checkpoint(sym
-        .join(dist.select(col("id").as("id_a"), col("dist")), Seq("id_a"))
-        .select(col("id_b").as("id"), (col("dist") + col("weight")).as("dist"))
-        .unionByName(dist)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist")))
-      Bridge.releaseFrame(dist)
-      dist = relaxed
-      r += 1
+    val sym = DriverLocal.labelled(spark, "graph.sssp edges")(
+      Bridge.checkpoint(edges.select(
+          least(col("id_a"), col("id_b")).as("a"),
+          greatest(col("id_a"), col("id_b")).as("b"),
+          col("weight").cast("double").as("w"))
+        .filter(col("a") =!= col("b"))
+        .groupBy(col("a"), col("b"))
+        .agg(min(col("w")).as("w"))
+        .select(explode(array(
+          struct(col("a").as("x"), col("b").as("y"), col("w")),
+          struct(col("b").as("x"), col("a").as("y"), col("w")))).as("__e"))
+        .select(col("__e.x").as("id_a"), col("__e.y").as("id_b"),
+          col("__e.w").as("weight"))))
+    val seed = seeds.select(col("id")).distinct().withColumn("dist", lit(0.0))
+    // one relaxation: dist' = min(dist, min over edges (dist[src] + w))
+    def relax(dist: DataFrame) = sym
+      .join(dist.select(col("id").as("id_a"), col("dist")), Seq("id_a"))
+      .select(col("id_b").as("id"), (col("dist") + col("weight")).as("dist"))
+      .unionByName(dist)
+      .groupBy(col("id")).agg(min(col("dist")).as("dist"))
+    // ids as the distributed union types them (edge and seed id types
+    // widened to one)
+    val out = relax(seed).schema
+    val idType = out("id").dataType
+    val local = for {
+      e <- DriverLocal.edges(sym, "sssp", col("id_a").cast(idType),
+        col("id_b").cast(idType), col("weight"))
+      // raw seed ids: one scan job, duplicates merge on the driver
+      s <- DriverLocal.labelled(spark, "graph.sssp driver-local")(
+        DriverLocal.collectIfFits(seeds.select(col("id").cast(idType))))
+    } yield spark.createDataFrame(localSssp(e, s, rounds).asJava, out)
+    val dist = local.getOrElse {
+      var dist = DriverLocal.labelled(spark, "graph.sssp round 0")(
+        Bridge.checkpoint(seed))
+      for (r <- 1 to rounds) {
+        val relaxed = DriverLocal.labelled(spark, s"graph.sssp round $r")(
+          Bridge.checkpoint(relax(dist)))
+        Bridge.releaseFrame(dist)
+        dist = relaxed
+      }
+      dist
     }
     Bridge.releaseFrame(sym)
     dist.select(col("id"), round(col("dist"), scale).as("dist"))
+  }
+
+  /** [[sssp]]'s `rounds` synchronous relaxations over collected directed
+    * (id_a, id_b, weight) edges from the collected seed ids (repeats
+    * allowed) at 0.0: each
+    * candidate is dist[src] + w, and a node keeps the least (NaN
+    * greatest, as Spark's `min` orders it). One (id, dist) row per
+    * reached node. */
+  private def localSssp(edges: Array[Row], seeds: Array[Row],
+      rounds: Int): Seq[Row] = {
+    val ids = new DriverLocal.Ids
+    val seed = seeds.map(r => ids(r.get(0)))
+    val src = edges.map(r => ids(r.get(0)))
+    val dst = edges.map(r => ids(r.get(1)))
+    val w = edges.map(_.getDouble(2))
+    var dist = Array.fill(ids.size)(Double.NaN)
+    var reached = new Array[Boolean](ids.size)
+    seed.foreach { i => dist(i) = 0.0; reached(i) = true }
+    for (_ <- 1 to rounds) {
+      val next = dist.clone()
+      val nextReached = reached.clone()
+      edges.indices.foreach { i =>
+        if (reached(src(i))) {
+          val c = dist(src(i)) + w(i)
+          val v = dst(i)
+          if (!nextReached(v) || c < next(v) || next(v).isNaN) {
+            next(v) = c
+            nextReached(v) = true
+          }
+        }
+      }
+      dist = next
+      reached = nextReached
+    }
+    ids.ids.indices.filter(reached).map(v => Row(ids.ids(v), dist(v)))
   }
 }

@@ -37,7 +37,10 @@ object PlanAudit {
         |static plan; at run time AQE only re-plans in the engine's favor
         |(skew splits, bcast promotion). Iterative operators (q_pagerank) plan
         |per-round frames eagerly, so their one-shot plan shows the final
-        |assembly only; bounded-collect operators (q_markov_attrib, q_cox_ph)
+        |assembly only, and graph operators whose edges pass the broadcast
+        |byte gate (q_pagerank, q_sssp, q_kcore) solve on the driver at
+        |construction time, so their plan is a LocalTableScan plus the output
+        |projection; bounded-collect operators (q_markov_attrib, q_cox_ph)
         |run their grid aggregation at construction time, so the audited plan
         |is the final scalar assembly -- the distributed work is in the
         |collect. q_archive_e2e and q_wet_export write their output at

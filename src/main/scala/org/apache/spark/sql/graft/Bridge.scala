@@ -74,12 +74,29 @@ object Bridge {
   /** Whether `rows` rows of `df`'s schema pass the planner's own
     * broadcast test (`spark.sql.autoBroadcastJoinThreshold`), for a
     * lazy frame whose row count is bounded by a known one. */
-  def fitsBroadcast(df: DataFrame, rows: Long): Boolean = {
+  def fitsBroadcast(df: DataFrame, rows: Long): Boolean =
+    rows <= broadcastRowCap(df)
+
+  /** The most rows of `df`'s schema whose size, as Catalyst sizes rows
+    * (`EstimationUtils.getSizePerRow`), is within the broadcast
+    * threshold; -1 when the threshold is negative (broadcasts off). */
+  def broadcastRowCap(df: DataFrame): Long = {
     val limit = classicDs(df).sparkSession.sessionState.conf
       .autoBroadcastJoinThreshold
-    limit >= 0 && EstimationUtils.getOutputSize(
-      classicDs(df).queryExecution.analyzed.output, rows) <= limit
+    if (limit < 0) -1L
+    else (BigInt(limit) / EstimationUtils.getSizePerRow(
+      classicDs(df).queryExecution.analyzed.output)).toLong
   }
+
+  /** `schema` with every field nullable, as a file source reports its
+    * data schema. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
+  /** The session's SQL conf, for Spark's own readers and converters. */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
 
   /** Block until every event posted so far has reached every listener
     * (job, task and SQL-execution metrics of finished work). */

@@ -12,6 +12,8 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // the test tables' events.ts is parquet TIMESTAMP(NANOS) (Tables.load)
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 
   /** Runs `body` once per join-strategy regime a plan-independent check

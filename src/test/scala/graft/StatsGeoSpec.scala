@@ -257,16 +257,21 @@ class StatsGeoSpec extends SparkSpec {
     }
   }
 
-  test("gridDbscan distributed CC path (gate 0) == driver BFS path") {
+  test("gridDbscan distributed CC path (threshold -1) == driver BFS path") {
     val rnd = new scala.util.Random(41)
     val pts = (1 to 300).map(i =>
       (i.toLong, rnd.nextDouble() * 20 - 10, rnd.nextDouble() * 40 - 20))
       .toDF("id", "lat", "lon")
-    def run(gate: Long) = Geo.gridDbscan(pts, "lat", "lon", "id", 2.0, 3L,
-      driverGate = gate).collect()
-      .map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(run(200000L) == run(0L))
+    // the byte gate reads the broadcast threshold: 10 MiB holds the
+    // core cells (driver BFS), -1 forces connectedComponents
+    val runs = scala.collection.mutable.ArrayBuffer[Map[Long, Option[Long]]]()
+    forEachBroadcastThreshold {
+      runs += Geo.gridDbscan(pts, "lat", "lon", "id", 2.0, 3L).collect()
+        .map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    }
+    assert(runs.size == 2 && runs(0) == runs(1))
+    assert(runs(0).values.exists(_.nonEmpty))
   }
 
   // ---- conformal ----
